@@ -39,12 +39,15 @@ object Lake {
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
-  /** S2/S3: read the whole lake (or one channel via partition pruning). */
+  /** S2: read the whole lake — one listing and one schema inference. */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  def readChannel(spark: SparkSession, path: String, channelKey: String): DataFrame =
-    read(spark, path).filter(col("channel_key") === channelKey)
+  /** S3: one channel of a lake already resolved by [[read]], via
+    * partition pruning — no further listing or schema inference.
+    */
+  def readChannel(lake: DataFrame, channelKey: String): DataFrame =
+    lake.filter(col("channel_key") === channelKey)
 
   /** Channel discovery (reference: s3.list_objects, extract.py:158-159)
     * — a pure filesystem directory listing of the `channel_key=` partition

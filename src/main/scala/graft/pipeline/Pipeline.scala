@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import java.sql.Timestamp
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ingest.Ingest
 import graft.lake.Lake
@@ -51,19 +53,45 @@ object Pipeline {
   /** Load every discovered channel into `<db>.<channel>_raw` — task
     * `loading_data_db` (extract.py:205-208,156-171). Channel discovery is
     * a filesystem listing (like the reference's bucket listing); each
-    * load is truncate+reload (W2). Returns qualified table names.
+    * load is truncate+reload (W2). Returns the qualified table names in
+    * `Lake.channels` (sorted) order, which fixes the mart's UNION order.
+    *
+    *   - One lake listing per call: the parquet lake is listed and its
+    *     schema inferred once, and every channel's frame is a
+    *     partition-pruned filter of that one resolution — so all RAW
+    *     tables come from a single lake snapshot. The header-CSV lake
+    *     keeps the reference's per-channel `read_csv` schema inference.
+    *   - Concurrent loads: the per-channel loads run on a driver thread
+    *     pool of min(#channels, defaultParallelism) threads, since one
+    *     channel's write is a small job that leaves most cores idle.
+    *   - Failure contract: every load runs to completion even when
+    *     another fails, then the first failure in channel order is
+    *     rethrown. No write is still running when the call returns or
+    *     throws, so a `Retry` of the whole load (runWithRetries) never
+    *     races a leftover write.
     */
   def loadWarehouse(spark: SparkSession, conf: Config): Seq[String] = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${conf.database}")
-    Lake.channels(spark, conf.lakePath).map { ch =>
-      val table = s"${conf.database}.${Ingest.rawTableName(ch)}"
-      val df =
-        if (conf.csvLake)
-          Lake.readCsv(spark, s"${conf.lakePath}/channel_key=$ch")
-        else Lake.readChannel(spark, conf.lakePath, ch).drop("channel_key")
-      Warehouse.loadRaw(df, table)
-      table
-    }
+    val chans = Lake.channels(spark, conf.lakePath)
+    val tables = chans.map(ch => s"${conf.database}.${Ingest.rawTableName(ch)}")
+    // Resolved by the first load that needs it; an empty lake has no schema.
+    lazy val lake = Lake.read(spark, conf.lakePath)
+    def frame(ch: String): DataFrame =
+      if (conf.csvLake) Lake.readCsv(spark, s"${conf.lakePath}/channel_key=$ch")
+      else Lake.readChannel(lake, ch).drop("channel_key")
+    // Keys that differ only in case share a table; the last one wins, as
+    // it did when the channels were loaded one after another.
+    val owner = tables.zip(chans).toMap
+    val loads = tables.distinct.map(t =>
+      (() => Warehouse.loadRaw(frame(owner(t)), t)): Callable[Unit])
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(loads.size, spark.sparkContext.defaultParallelism)))
+    try
+      pool.invokeAll(loads.asJava).asScala.foreach { done =>
+        try done.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+    finally pool.shutdown()
+    tables
   }
 
   /** W4: one identity staging view per RAW table (dbt `materialized:

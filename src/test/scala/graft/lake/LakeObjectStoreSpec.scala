@@ -39,7 +39,7 @@ class LakeObjectStoreSpec extends SparkSpec {
     val all = Lake.read(spark, path)
     assert(all.count() === 4, "2 appends x 2 channel rows")
 
-    val one = Lake.readChannel(spark, path, "Alpha_News")
+    val one = Lake.readChannel(all, "Alpha_News")
     assert(one.count() === 2)
     // partition pruning must reach the mocks3 scan like any other path
     val plan = one.queryExecution.executedPlan.toString

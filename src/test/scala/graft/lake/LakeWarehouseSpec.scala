@@ -49,7 +49,7 @@ class LakeWarehouseSpec extends SparkSpec {
     // channel discovery = filesystem listing of partition dirs, sorted
     // (Chan k=2 title "Beta Two-Kids/HD" -> key "Beta_Two_Kids")
     assert(Lake.channels(spark, lake) === Seq("Alpha_One", "Beta_Two_Kids"))
-    val one = Lake.readChannel(spark, lake, Lake.channels(spark, lake).head)
+    val one = Lake.readChannel(Lake.read(spark, lake), Lake.channels(spark, lake).head)
     assert(one.count() === 2)
     assert(one.select("title").distinct().count() === 1)
   }

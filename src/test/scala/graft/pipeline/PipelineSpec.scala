@@ -1,6 +1,12 @@
 package graft.pipeline
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import graft.SparkSpec
+import graft.ingest.Ingest
+import graft.lake.Lake
 
 /** SURVEY §5.4: full pipeline replay over reference-shaped fixtures —
   * mart schema equals §1.2's table, row count = channels × batches, and
@@ -85,6 +91,142 @@ class PipelineSpec extends SparkSpec {
     val tables = spark.sql("SHOW TABLES IN ytanalytics_retry_flaky")
       .collect().map(_.getString(1))
     assert(!tables.exists(_.toLowerCase.contains("phantom")), tables.toSeq)
+  }
+
+  /** A lake of `cs` × `nBatches` behind a reset database (as
+    * `Pipeline.run` resets it), with nothing loaded yet.
+    */
+  private def lakeOf(name: String, cs: Seq[SyntheticChannels.Chan]): Pipeline.Config = {
+    val conf = Pipeline.Config(lakePath = scratch(s"pipe_lake_$name"),
+      database = s"ytanalytics_$name")
+    spark.sql(s"DROP DATABASE IF EXISTS ${conf.database} CASCADE")
+    val dbDir = new org.apache.hadoop.fs.Path(
+      s"${spark.conf.get("spark.sql.warehouse.dir")}/${conf.database}.db")
+    dbDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dbDir, true)
+    (1 to nBatches).foreach(b => Pipeline.extractBatch(spark,
+      cs.map(SyntheticChannels.json(_, b)), SyntheticChannels.batchTs(b), conf))
+    conf
+  }
+
+  /** `n` channels; k <= 8 keeps SyntheticChannels.publishedAt a valid date. */
+  private def wideLake(name: String, n: Int): Pipeline.Config =
+    lakeOf(name, (1 to n).map(k => SyntheticChannels.Chan(k, s"Wide#$k", k, k - 3.5)))
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Each channel's RAW table holds exactly its lake partition's rows. */
+  private def assertLoaded(conf: Pipeline.Config, chans: Seq[String]): Unit = {
+    val lake = Lake.read(spark, conf.lakePath)
+    chans.foreach { ch =>
+      val want = Lake.readChannel(lake, ch).drop("channel_key")
+      val got = spark.table(s"${conf.database}.${Ingest.rawTableName(ch)}")
+      assert(got.columns.toSeq === want.columns.toSeq, ch)
+      val rows = rowSet(got)
+      assert(rows.size === nBatches, ch)
+      assert(rows === rowSet(want), ch)
+    }
+  }
+
+  /** Runs `body` under its own job group. Returns its outcome, the
+    * wall-clock millis at which it returned, and the jobs of the group as
+    * a SparkListener saw them: job id -> (start time, end time if ended).
+    * A job of the group that starts after `body` returned (a straggling
+    * write) gets a second to show itself. Listener events arrive
+    * asynchronously but in order, so once a marker job submitted after
+    * that is seen, so are all the group's jobs that had started.
+    */
+  private def traced[T](group: String)(body: => T)
+      : (Try[T], Long, Map[Int, (Long, Option[Long])]) = {
+    val sc = spark.sparkContext
+    val marker = s"$group-marker"
+    val started = new ConcurrentHashMap[Int, Long]()
+    val ended = new ConcurrentHashMap[Int, Long]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.put(e.jobId, e.time)
+          case Some(`marker`) => drained.countDown()
+          case _ => ()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        ended.put(e.jobId, e.time); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = Try(body)
+      val returnedAt = System.currentTimeMillis()
+      Thread.sleep(1000)
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS))
+      (out, returnedAt,
+        started.asScala.map { case (id, t) => id -> (t, ended.asScala.get(id)) }.toMap)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("concurrent warehouse load over more channels than cores: order and content") {
+    val conf = wideLake("wide", 8)
+    assert(8 > spark.sparkContext.defaultParallelism, "the pool must be full")
+    val chans = Lake.channels(spark, conf.lakePath)
+    assert(chans.size === 8)
+    assert(Pipeline.loadWarehouse(spark, conf) ===
+      chans.map(ch => s"${conf.database}.${Ingest.rawTableName(ch)}"))
+    assertLoaded(conf, chans)
+  }
+
+  test("one failing channel load: rethrown once every other load has finished") {
+    val conf = wideLake("loadfail", 6)
+    val chans = Lake.channels(spark, conf.lakePath)
+    val bad = chans.head
+    val badTable = s"${conf.database}.${Ingest.rawTableName(bad)}"
+    // An external table whose location is the managed default, with data
+    // in it: the overwrite drops the entry, keeps the files, and then
+    // refuses to create the managed table over the non-empty location.
+    spark.sql(s"CREATE DATABASE ${conf.database}")
+    val loc = s"${spark.catalog.getDatabase(conf.database).locationUri}/" +
+      Ingest.rawTableName(bad)
+    spark.sql(s"CREATE TABLE $badTable (x INT) USING parquet LOCATION '$loc'")
+    spark.sql(s"INSERT INTO $badTable VALUES (1)")
+
+    var activeAtReturn = Seq.empty[Int]
+    val (out, returnedAt, jobs) = traced("load-fail") {
+      try Pipeline.loadWarehouse(spark, conf)
+      finally activeAtReturn = spark.sparkContext.statusTracker.getActiveJobIds().toSeq
+    }
+    assert(activeAtReturn.isEmpty, activeAtReturn)
+    val e = out.failed.get
+    assert(e.getMessage.contains("LOCATION_ALREADY_EXISTS"), e.getMessage)
+    assert(e.getMessage.contains(Ingest.rawTableName(bad)), e.getMessage)
+    // no write of the failed call was still running when it returned
+    assert(jobs.nonEmpty)
+    assert(jobs.values.forall { case (start, end) =>
+      start <= returnedAt && end.exists(_ <= returnedAt) }, jobs)
+    assertLoaded(conf, chans.filterNot(_ == bad))
+  }
+
+  test("warehouse load job budget: at most one job per channel plus one") {
+    val n = 6
+    val conf = wideLake("budget", n)
+    val (out, _, jobs) = traced("load-budget")(Pipeline.loadWarehouse(spark, conf))
+    assert(out.get.size === n)
+    assert(jobs.size <= n + 1, s"${jobs.size} jobs for $n channels")
+  }
+
+  test("channel keys that differ only in case share one RAW table; the last one wins") {
+    val conf = lakeOf("case", Seq(SyntheticChannels.Chan(1, "Case#One", 1, 1.0),
+      SyntheticChannels.Chan(3, "case#one", 3, 2.0)))
+    val chans = Lake.channels(spark, conf.lakePath)
+    assert(chans === Seq("Case_One", "case_one"))
+    val table = s"${conf.database}.case_one_raw"
+    assert(Pipeline.loadWarehouse(spark, conf) === Seq(table, table))
+    assertLoaded(conf, chans.takeRight(1))
   }
 
   test("retries are bounded: attempts exhausted rethrows the last failure") {
