@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.{Json, Session}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each query is fully executed via the `noop`
@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     // dev-only (the driver never sets it): comma-separated query filter so
     // a single regressed query can be re-timed without the full suite.
     val only: Option[Set[String]] =
@@ -30,35 +30,7 @@ object Bench {
     // boundaries can leak a trailing task into the next query; the
     // numbers are for the scaling picture, not sub-second accounting.
     val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Size file splits to the BENCH scale, not the 128 MB cluster
-      // default: the test tables arrive as 1-2 splits under the
-      // default, so every narrow pre-shuffle segment (tokenize, gram
-      // build, signature kernels) serializes onto one core — the sf1
-      // rehearsal measured a 760 s single-task shuffle-map stage that
-      // 32 splits turn into ~25 s. At 100 TB the same knob is set by
-      // the data (thousands of row groups); locally it must be set by
-      // hand, exactly as the brief's spill-aware sizing rule says.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "4m"))
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE coalesce partitions when materializing CACHED plans too
-      // (default false pins cached shuffles at the static partition count
-      // — tiny cached iterables like the dedup-cluster graph would burn
-      // hundreds of empty tasks per iteration otherwise)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); must be set before the
-      // FIRST read (warmup included) or the vectorized reader rejects it.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // q35's warehouse tables land here, not in the repo working dir.
-      .config("spark.sql.warehouse.dir",
-        graft.util.TmpDirs.perProcess("graft_warehouse"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(cpus)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(
@@ -117,22 +89,15 @@ object Bench {
       (ms.head._1, best._2, best._3,
         ms.foldLeft(Option.empty[String])((acc, m) => acc.orElse(m._4)))
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, v, _, _) => jstr(k) + ":" + v }
+    val qs = results.map { case (k, v, _, _) => Json.str(k) + ":" + v }
       .mkString("{", ",", "}")
     // executor task-seconds per query (same best-of pass as the wall
     // number): task_sec >> wall sec at c32 is the direct evidence the
     // query runs wide — the scaling signal the wall-clock c8/c32 ratio
     // cannot carry on an overhead-bound SF.
-    val tsk = results.map { case (k, _, ts, _) => jstr(k) + ":" + ts }
+    val tsk = results.map { case (k, _, ts, _) => Json.str(k) + ":" + ts }
       .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, Some(e)) => jstr(k) + ":" + jstr(e) }
+    val errs = results.collect { case (k, _, _, Some(e)) => Json.str(k) + ":" + Json.str(e) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"task_sec":$tsk,"cpus":$cpus,"errors":$errs,"sf":"$sfDir"}""")

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.util.Session
 
 /** Dev-only: dump `.explain("formatted")` for named queries to files —
   * the optimization-round evidence trail (plans/r15/<query>_<tag>.txt).
@@ -37,21 +37,7 @@ object PlanDump {
       s"PlanDump mode must be static|final, got $mode")
     sys.env.get("SPARK_GRAFT_PLAN_PROBE_DIR")
       .foreach(sys.props("graft.plan.probe.dir") = _)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "4m"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        graft.util.TmpDirs.perProcess("graft_warehouse"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.cpus)
     Files.createDirectories(Paths.get(outDir))
     var failures = List.empty[String]
     names.foreach { name =>

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.util.Session
 
 /** Dev main: regenerate PLANS.md — the formatted physical plans of the
   * headline queries with the scale property each plan must exhibit.
@@ -171,18 +171,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        graft.util.TmpDirs.perProcess("graft_warehouse"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.cpus)
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries\n\n")
@@ -196,8 +185,9 @@ object Plans {
 ## Bench-noise note (r07 q73/q56 "regressions")
 
 BENCH_r07 showed q73 1.19→1.72 s and q56 0.73→1.00 s vs r06 with no
-source change to either operator. Isolated re-profiling (graft.
-ProfileReg, same session config as Bench, warmup + 3 passes at sf0.1)
+source change to either operator. Isolated re-profiling (a since-removed
+isolation main (git history), same session config as Bench, warmup +
+3 passes at sf0.1)
 measured steady-state q73 ≈ 1.05 s and q56 ≈ 0.65 s — at or below
 their r06 numbers. The r07 figures were suite-context noise (GC/host
 interference inside a 171-query best-of-2 sweep), not plan
@@ -211,8 +201,8 @@ The r11-regenerated 3-SF sweep's sf0.1 column drifted +16.5% on the
 263 queries common with r10 (306.6 → 357.3 s, +0.6–1.0 s spread
 broadly) while BENCH_r11's common-56 subset got 5% FASTER — the round
 judge required attribution (suite noise vs real BatchState.gc
-overhead). ProfileReg isolation at sf0.1 (fresh JVM, warmup + 3
-passes, Bench session config) on the top-12 drifted queries:
+overhead). Solo re-profiling by a since-removed isolation main (git history)
+at sf0.1 (fresh JVM, warmup + 3 passes, Bench session config) on the top-12 drifted queries:
 
 | query | isolated steady | r10 sweep | r11 sweep |
 |---|---|---|---|
@@ -237,7 +227,8 @@ per-query regression exists; the whole +16.5% is suite-context noise
 accumulation — the r07 profile at larger suite size).
 
 BatchState.gc specifically EXONERATED by a controlled on/off run
-(`SPARK_GRAFT_SKIP_STATE_GC=1`, dev-only): with gc DISABLED the
+(a dev-only env var that turned gc off; the flag was removed after
+this measurement): with gc DISABLED the
 monitors get SLOWER (q228 3.35–3.97 s vs 2.59–2.91 gc-on; q123
 3.87–4.12 vs 3.67–3.72; q270 unchanged ~2.2) because every batch's
 `committedIds` listing grows with the un-retired state dirs — gc is
@@ -251,8 +242,8 @@ regressed.
 
 ### r12 streaming-overhead pass (the fourth)
 
-Measured with a StreamingQueryListener progress dump (ProfileQ95),
-not folklore. q95's ~3.6 s isolated steady-state decomposes as: 3
+Measured with a StreamingQueryListener progress dump (a since-removed
+isolation main (git history)), not folklore. q95's ~3.6 s isolated steady-state decomposes as: 3
 micro-batch triggers totalling ~2.9 s, of which state-store commit
 is 0.69–0.85 s per trigger (HDFS-backed store across 4 partitions ×
 2 join sides) and the LAST trigger is an empty watermark-finalization
@@ -286,7 +277,8 @@ need, so the floor is documented instead of gamed.
 
 BENCH_r13 moved q84/q87/q88/q89 by 1.26–1.40× vs r12 with no commit
 touching those operators' plans (r13 was guards/proofs/transports).
-ProfileReg isolation at sf0.1 (fresh JVMs, Bench session config,
+Solo re-profiling by a since-removed isolation main (git history) at sf0.1
+(fresh JVMs, Bench session config,
 warmup + 3 passes, three separate sessions minutes apart on a quiet
 box — load < 2, PSI cpu full = 0):
 
@@ -313,8 +305,8 @@ steady-state reproduces OUTSIDE the bracket.
 ### r14 q174 in-suite width flake → emission pin
 
 The round-14 sf1-decade refresh measured q174 at 237 s in-suite
-(64 s in r13, exp 1.52 ⚠) while ProfileReg isolation read 53.5 s
-warmup / 41.8 s steady in a fresh JVM — an in-suite-only collapse,
+(64 s in r13, exp 1.52 ⚠) while solo re-profiling by a since-removed
+isolation main (git history) read 53.5 s warmup / 41.8 s steady in a fresh JVM — an in-suite-only collapse,
 NOT the host-stall signature above (those bracket the sweep values
 from both sides; 237 s sits 4–6× OUTSIDE the solo envelope, and the
 suite's other 48 rows drifted a uniform ~1.3×, today's host tax).

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Session
 
 /** Dev harness: run one named query against a scale dir and show rows +
   * the formatted physical plan (`sbt "runMain graft.RunOne q35_... /root/
@@ -10,22 +10,7 @@ object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE coalesce partitions when materializing CACHED plans too
-      // (default false pins cached shuffles at the static partition count
-      // — tiny cached iterables like the dedup-cluster graph would burn
-      // hundreds of empty tasks per iteration otherwise)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        graft.util.TmpDirs.perProcess("graft_warehouse"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.cpus)
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (args.contains("explain")) df.explain("formatted")
     df.show(50, truncate = false)

@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions._
   *
   * Spark's `try_cast` evaluates the ANSI cast and catches the per-row
   * exception; each malformed row costs ~17 µs of throw/fill-in-stack
-  * (measured: 1.36 s vs 0.20 s over 150k all-malformed rows — see
-  * ProfileQ03). On a mostly-VALID column that cost never materializes
-  * and `try_cast` is the right tool (the mart cast projection keeps
-  * it). On a column where malformed is the COMMON case — free-text
-  * fields probed for numbers, the q03 status column — a regex guard
-  * rejects without ever throwing, ~7x faster per malformed row.
+  * (measured: 1.36 s vs 0.20 s over 150k all-malformed rows, by a
+  * since-removed isolation main (git history)). On a mostly-VALID
+  * column that cost never materializes and `try_cast` is the right
+  * tool (the mart cast projection keeps it). On a column where
+  * malformed is the COMMON case — free-text fields probed for numbers,
+  * the q03 status column — a regex guard rejects without ever
+  * throwing, ~7x faster per malformed row.
   *
   * Contract vs `try_cast(s AS INT)`: identical for integer strings of
   * ≤18 digits (optional sign/surrounding whitespace), including int

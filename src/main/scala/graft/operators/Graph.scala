@@ -115,7 +115,7 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("u").as("node"), col("du")).distinct()
     // measured-|V| broadcast gate for the loop frames (see `gated`)
-    val small = nodes.count() <= 10000000L
+    val nNodes = nodes.count()
     val seed = nodes.agg(min("node").as("seed"))
     var score = nodes.crossJoin(broadcast(seed))
       .select(col("node"), col("du"), col("seed"),
@@ -124,11 +124,11 @@ object Graph {
     for (it <- 1 to iters) {
       val contrib = score.filter(col("s") > 0)
         .select(col("node").as("u"), expr("s div du").as("c"))
-      val inbound = e.select("u", "v").join(gated(contrib, small), "u")
+      val inbound = e.select("u", "v").join(gated(contrib, nNodes), "u")
         .groupBy("v").agg(sum("c").as("inc"))
         .withColumnRenamed("v", "node")
       val step = score.select("node", "du", "seed")
-        .join(gated(inbound, small), Seq("node"), "left")
+        .join(gated(inbound, nNodes), Seq("node"), "left")
         .withColumn("s",
           when(col("node") === col("seed"), lit(150000000L))
             .otherwise(lit(0L)) +
@@ -341,6 +341,9 @@ object Graph {
           .as("clustering_bp"))
   }
 
+  /** The one broadcast ceiling of `gated`, in nodes (~160 MB built). */
+  val BroadcastNodeLimit = 10000000L
+
   /** Broadcast a |V|-row loop frame only when the MEASURED node count
     * fits the broadcast envelope (r15, the q237 dv discipline): the
     * score/label/contribution tables of every propagation loop are one
@@ -353,8 +356,8 @@ object Graph {
     * keyed join degrades gracefully. The count is one action over an
     * already-persisted frame.
     */
-  private def gated(df: DataFrame, small: Boolean): DataFrame =
-    if (small) broadcast(df) else df
+  private[graft] def gated(df: DataFrame, measuredNodes: Long): DataFrame =
+    if (measuredNodes <= BroadcastNodeLimit) broadcast(df) else df
 
   def pageRankInt(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "pageRankInt needs iters >= 1")
@@ -367,7 +370,6 @@ object Graph {
     // means no rows, so the guard value never reaches one), and gates
     // the loop broadcasts.
     val nNodes = nodes.count()
-    val small = nNodes <= 10000000L
     val init = if (nNodes == 0) 0L else 1000000000L / nNodes
     val tele = (15L * init) / 100L
     var score = nodes
@@ -376,7 +378,7 @@ object Graph {
     for (it <- 1 to iters) {
       val contrib = score
         .select(col("node").as("u"), expr("s div du").as("c"))
-      val inbound = e.select("u", "v").join(gated(contrib, small), "u")
+      val inbound = e.select("u", "v").join(gated(contrib, nNodes), "u")
         .groupBy("v").agg(sum("c").as("inc"))
         .withColumnRenamed("v", "node")
       // Each superstep's score table (|nodes| rows) is cached: without
@@ -385,7 +387,7 @@ object Graph {
       // iters). The cluster-scale form checkpoints every few supersteps
       // and unpersists the predecessors.
       val step = score.select("node", "du", "tele")
-        .join(gated(inbound, small), "node")
+        .join(gated(inbound, nNodes), "node")
         .withColumn("s", expr("tele + (85 * inc) div 100"))
         .drop("inc")
       probeRoundPlan("q180_pagerank_copurchase", it, step)
@@ -419,10 +421,10 @@ object Graph {
     // `gated`): without it the label join sort-merges the cached edge
     // set every round (checkpoint stats carryover defeats the auto
     // threshold)
-    val small = labels.count() <= 10000000L
+    val nNodes = labels.count()
     for (r <- 1 to rounds) {
       val counted = e
-        .join(gated(labels.select(col("node").as("v"), col("lbl")), small),
+        .join(gated(labels.select(col("node").as("v"), col("lbl")), nNodes),
           "v")
         .groupBy(col("u").as("node"), col("lbl"))
         .agg(count(lit(1)).as("n"))
@@ -591,21 +593,21 @@ object Graph {
       .localCheckpoint(eager = true)
     // measured-|V| broadcast gate for the per-round label frames (see
     // `gated`)
-    val small = lbl.count() <= 10000000L
+    val nNodes = lbl.count()
     var last = lbl
     for (r <- 1 to rounds) {
       last = lbl
       val nbrMin = e.join(gated(lbl.select(col("node").as("u"),
-          col("lbl").as("nl")), small), "u")
+          col("lbl").as("nl")), nNodes), "u")
         .groupBy(col("v").as("node")).agg(min("nl").as("m"))
-      val step = lbl.join(gated(nbrMin, small), Seq("node"), "left")
+      val step = lbl.join(gated(nbrMin, nNodes), Seq("node"), "left")
         .select(col("node"),
           least(col("lbl"), coalesce(col("m"), col("lbl"))).as("lbl"))
       probeRoundPlan("q259_connected_components", r, step)
       lbl = step.localCheckpoint(eager = true)
     }
     val out = lbl
-      .join(gated(last.select(col("node"), col("lbl").as("pl")), small),
+      .join(gated(last.select(col("node"), col("lbl").as("pl")), nNodes),
         "node")
       .select(col("node"), col("lbl").as("component"),
         when(col("lbl") =!= col("pl"), lit(1L)).otherwise(lit(0L))

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import java.time.Instant
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import graft.util.Json
 
 /** Deterministic YouTube-API-shaped JSON responses derived from the
   * `customer` test table: 7 channels (c_custkey 1..7) × 3 batches,
@@ -70,9 +71,9 @@ object SyntheticChannels {
        |    "etag": "item-${c.k}-$batch",
        |    "id": "UC${c.k}",
        |    "snippet": {
-       |      "title": ${jsonStr(c.title)},
+       |      "title": ${Json.str(c.title)},
        |      "description": "channel ${c.k} description",
-       |      "customUrl": ${jsonStr("@" + c.name.toLowerCase)},
+       |      "customUrl": ${Json.str("@" + c.name.toLowerCase)},
        |      "publishedAt": "$publishedAt",
        |      "thumbnails": {
        |        "default": {"url": "https://img/${c.k}/default.jpg", "width": 88, "height": 88},
@@ -108,12 +109,4 @@ object SyntheticChannels {
     val chans = channels(spark, sfDir)
     (1 to nBatches).map(b => batchTs(b) -> chans.map(json(_, b)))
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -1214,7 +1214,7 @@ object GraphStatsQueries {
         // the probe join consumes anyway — and ≤ 10M nodes (~160 MB
         // built) broadcasts; above, the keyed join degrades gracefully.
         val dvT = e.groupBy(col("v")).agg(count(lit(1)).as("dv")).cache()
-        val dv = if (dvT.count() <= 10000000L) broadcast(dvT) else dvT
+        val dv = graft.operators.Graph.gated(dvT, dvT.count())
         graft.operators.Stats.chiSquareBp(
           e.join(dv, "v"),
           length(bin(col("du"))), length(bin(col("dv"))))

@@ -78,7 +78,8 @@ object Relational {
     // is malformed on EVERY row, so it uses SafeCast.tryInt (regex
     // guard, no exception path) instead of try_cast — try_cast throws
     // and catches per malformed row, ~7x slower when malformed is the
-    // common case (ProfileQ03; the mostly-valid mart columns in YtFacts
+    // common case (measured by a since-removed isolation main (git
+    // history); the mostly-valid mart columns in YtFacts
     // rightly keep try_cast). The oracle replays the identical guard,
     // which also removes the genuine engine disagreement on decimal
     // strings (Spark try_cast('3.7')=NULL, DuckDB TRY_CAST('3.7')=4).

@@ -83,11 +83,6 @@ object BatchState {
   def gc(stateBase: String, components: Seq[String],
          batchId: Long): Seq[Long] = {
     require(components.nonEmpty, "BatchState needs >= 1 component")
-    // Dev-only profiling escape hatch (the SPARK_GRAFT_BENCH_ONLY
-    // precedent): lets ProfileReg measure a monitor with retention
-    // disabled to attribute per-batch gc cost. Never set in
-    // production — unbounded state dirs.
-    if (sys.env.contains("SPARK_GRAFT_SKIP_STATE_GC")) return Seq.empty
     val base = new org.apache.hadoop.fs.Path(stateBase)
     val fs = hadoopFs(base)
     if (!fs.exists(base)) return Seq.empty

@@ -5,23 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite run (Test / fork := true
   * puts all suites in one JVM; per-suite sessions would pay ~5 s startup
-  * each).
+  * each), built with the Bench settings on 4 cores.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_test_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.util.Session.build(4)
 }
 
 trait SparkSpec extends AnyFunSuite {

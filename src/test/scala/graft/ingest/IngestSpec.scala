@@ -25,6 +25,17 @@ class IngestSpec extends SparkSpec {
     assert(keyOf("A/B/C") === "A")
   }
 
+  test("Json.str round-trips every ASCII char, quote, backslash and a non-BMP char") {
+    // the escaper behind the synthetic responses this spec ingests
+    val s = (0 to 0x7f).map(_.toChar).mkString + "\"\\" + "\uD83D\uDE00"
+    val lit = graft.util.Json.str(s)
+    assert(!lit.exists(_ < ' '), "a raw control char survived escaping")
+    assert(Seq("\\n", "\\r", "\\t").forall(lit.contains))
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(lit, classOf[String])
+    assert(back === s)
+  }
+
   test("objectKey matches `<key>/<key>_data.csv`") {
     import spark.implicits._
     val k = Seq("Jungle-Toons/x").toDF("t")

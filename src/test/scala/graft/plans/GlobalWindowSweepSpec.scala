@@ -162,11 +162,6 @@ class GlobalWindowSweepSpec extends SparkSpec {
 
   test("bench scale: every sanctioned global window rides a bounded table") {
     val sfDir = "/root/testdata/sf0.1"
-    // bench-scale split sizing for the 4-core test session (the Bench
-    // knob): without it each sf0.1 parquet arrives as one split and
-    // the narrow stages serialize onto one core
-    val prevSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
     val report = try sanctioned.toSeq.sortBy(_._1).map { case (name, (cap, why)) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       // execute THIS Dataset's QueryExecution (a sink write would
@@ -178,10 +173,7 @@ class GlobalWindowSweepSpec extends SparkSpec {
       val worst = windows.map(windowInputRows).max
       releaseAll()
       (name, worst, cap, why)
-    } finally {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-      releaseAll()
-    }
+    } finally releaseAll()
     info("worst global-window input rows at sf0.1 (cap, site):")
     report.foreach { case (n, w, c, why) => info(s"  $n: $w <= $c ($why)") }
     val over = report.filter { case (_, worst, cap, _) => worst > cap }

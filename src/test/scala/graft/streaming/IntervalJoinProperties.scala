@@ -29,7 +29,11 @@ object IntervalJoinProperties extends Properties("graft.intervaljoin") {
   private val gapS = 30L   // join window
   private val delayS = 10L // watermark delay
 
-  private def ts(s: Long): Timestamp = new Timestamp(s * 1000L)
+  // Event times are offsets from a non-epoch base: the engine's initial
+  // watermark IS the epoch and a row with event time <= watermark is
+  // dropped as late, so a row at offset 0 from the epoch would break the
+  // operator's watermark-respecting-feed precondition in batch 0.
+  private def ts(s: Long): Timestamp = new Timestamp((1700000000L + s) * 1000L)
 
   private case class Side(rows: List[(Long, Long, Long)], nChunks: Int)
   private case class Case(left: Side, right: Side, tag: Long)

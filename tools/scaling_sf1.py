@@ -30,13 +30,13 @@ R9_NARRATIVE = (
     "parquet scan through the cached gram relation: ~700 core-seconds "
     "of hash-set intersects serialized onto 2 cores (451 s first-plan "
     "at sf1 vs 28\u201341 s at width 32 \u2014 2-task vs 32-task "
-    "verify stages, graft.QDebug). Fix (the knnJoin 1-split lesson, "
+    "verify stages, a since-removed isolation main (git history)). Fix (the knnJoin 1-split lesson, "
     "same class): prefixJaccard's verify probe side is explicitly "
     "repartitioned to cluster width \u2014 a user repartition AQE "
     "never coalesces \u2014 so the stage width is deterministic. "
     "Round-9 fixes still in force: knnJoin scored pass spread to "
     "cluster width, rankedNeighborsIvf \u00d78 bucket-key salt, "
-    "bench-scale maxPartitionBytes (4m; SPARK_GRAFT_MAX_SPLIT), and "
+    "bench-scale maxPartitionBytes (4m, graft.util.Session), and "
     "the PPJoin in-fan-out length filter (660 s quadratic tail "
     "\u2192 26.9 s on this closed ~31-word vocabulary; open-vocabulary "
     "corpora lean on the prefix filter, closed ones escalate to capped "
@@ -171,7 +171,7 @@ R10_NARRATIVE = (
     "(vec_id, bucket, parent, was_split) checkpoint of the split "
     "kernel with vectors re-joined from the build checkpoint WINS at "
     "sf0.1 (5.8 s vs 7.3 s unmaterialized) and LOSES at sf10 "
-    "(194.7 s vs 183.2 s, ProfileQ271, fresh JVMs): the kernel "
+    "(194.7 s vs 183.2 s, a since-removed isolation main (git history), fresh JVMs): the kernel "
     "replay is proportional to the FLAGGED membership while the "
     "re-join pays a full-corpus hash join per consumer branch — at "
     "scale the flagged share shrinks and recompute beats "
