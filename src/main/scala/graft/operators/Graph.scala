@@ -167,9 +167,7 @@ object Graph {
     // the upstream pair build + degree join re-execute per hop
     // (measured 6.6 s -> ~3 s at sf0.1, 3 hops)
     val e = edges.select("u", "v").cache()
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](e)
     var visited = e.agg(min(col("u")).as("node")).cache()
-    cached += visited
     var frontier = visited
     var rows = Vector.empty[(Long, Long, Long)]
     var cum = 1L
@@ -178,7 +176,6 @@ object Graph {
         .select(col("v").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
         .cache()
-      cached += next
       val size = next.count()
       cum += size
       rows :+= ((h.toLong, size, cum))
@@ -189,7 +186,6 @@ object Graph {
       // union is already a set — the distinct was one full shuffle of
       // the visited table per hop for nothing.
       visited = visited.unionAll(next).cache()
-      cached += visited
       frontier = next
     }
     // Hop caches are NOT swept here (r15, measured): each
@@ -199,8 +195,8 @@ object Graph {
     // query's ~4.5 s (within-session A/B, plans/r15 probe: ~2.2-2.8 s
     // without the sweep vs 2.8-5.4 s with). Release is the CALLER's
     // clearCache — the ngramJaccard/AdmissionGuard rule-5 convention;
-    // every harness (Bench, Verify, the profile mains) clears per
-    // query. `cached` stays as the documentation of what is held.
+    // every harness (Bench, Verify) clears per query. Held until then:
+    // `e`, the seed, and each hop's `next` and `visited`.
     import spark.implicits._
     rows.toDF("hop", "frontier_size", "cumulative_visited")
   }

@@ -44,17 +44,19 @@ object Pipeline {
     * the lake — task `downloading_rates` (extract.py:199-203).
     */
   def extractBatch(spark: SparkSession, jsons: Seq[String], batchTs: Timestamp,
-                   conf: Config): Unit = {
-    val raw = Ingest.extract(spark, jsons, batchTs)
+                   conf: Config): Unit =
+    append(Ingest.extract(spark, jsons, batchTs), conf)
+
+  private def append(raw: DataFrame, conf: Config): Unit =
     if (conf.csvLake) Lake.appendBatchCsv(raw, conf.lakePath)
     else Lake.appendBatch(raw, conf.lakePath)
-  }
 
   /** Load every discovered channel into `<db>.<channel>_raw` — task
     * `loading_data_db` (extract.py:205-208,156-171). Channel discovery is
     * a filesystem listing (like the reference's bucket listing); each
-    * load is truncate+reload (W2). Returns the qualified table names in
-    * `Lake.channels` (sorted) order, which fixes the mart's UNION order.
+    * load is truncate+reload (W2). Returns each qualified table name once,
+    * in first-occurrence `Lake.channels` (sorted) order, which fixes the
+    * mart's UNION order.
     *
     *   - One lake listing per call: the parquet lake is listed and its
     *     schema inferred once, and every channel's frame is a
@@ -73,7 +75,8 @@ object Pipeline {
   def loadWarehouse(spark: SparkSession, conf: Config): Seq[String] = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${conf.database}")
     val chans = Lake.channels(spark, conf.lakePath)
-    val tables = chans.map(ch => s"${conf.database}.${Ingest.rawTableName(ch)}")
+    val keyed = chans.map(ch => s"${conf.database}.${Ingest.rawTableName(ch)}")
+    val tables = keyed.distinct
     // Resolved by the first load that needs it; an empty lake has no schema.
     lazy val lake = Lake.read(spark, conf.lakePath)
     def frame(ch: String): DataFrame =
@@ -81,8 +84,8 @@ object Pipeline {
       else Lake.readChannel(lake, ch).drop("channel_key")
     // Keys that differ only in case share a table; the last one wins, as
     // it did when the channels were loaded one after another.
-    val owner = tables.zip(chans).toMap
-    val loads = tables.distinct.map(t =>
+    val owner = keyed.zip(chans).toMap
+    val loads = tables.map(t =>
       (() => Warehouse.loadRaw(frame(owner(t)), t)): Callable[Unit])
     val pool = Executors.newFixedThreadPool(
       math.max(1, math.min(loads.size, spark.sparkContext.defaultParallelism)))
@@ -122,13 +125,7 @@ object Pipeline {
     */
   def run(spark: SparkSession, batches: Seq[(Timestamp, Seq[String])],
           conf: Config): DataFrame = {
-    deleteDir(spark, conf.lakePath)
-    // Reset the database AND its on-disk location: the in-memory catalog
-    // forgets tables across JVMs while their files persist, and
-    // saveAsTable refuses a "new" managed table over a leftover location.
-    spark.sql(s"DROP DATABASE IF EXISTS ${conf.database} CASCADE")
-    deleteDir(spark,
-      s"${spark.conf.get("spark.sql.warehouse.dir")}/${conf.database}.db")
+    reset(spark, conf)
     batches.foreach { case (ts, jsons) => extractBatch(spark, jsons, ts, conf) }
     val rawTables = loadWarehouse(spark, conf)
     val views = registerStaging(spark, rawTables)
@@ -159,10 +156,7 @@ object Pipeline {
                      batches: Seq[(Timestamp, Seq[String])], conf: Config,
                      attempts: Int = 3, delayMs: Long = 0L,
                      taskProbe: String => Unit = _ => ()): DataFrame = {
-    deleteDir(spark, conf.lakePath)
-    spark.sql(s"DROP DATABASE IF EXISTS ${conf.database} CASCADE")
-    deleteDir(spark,
-      s"${spark.conf.get("spark.sql.warehouse.dir")}/${conf.database}.db")
+    reset(spark, conf)
     batches.zipWithIndex.foreach { case ((ts, jsons), i) =>
       val keep = listPaths(spark, conf.lakePath)
       Retry(s"extract#$i", attempts, delayMs,
@@ -178,6 +172,18 @@ object Pipeline {
     Retry("transform", attempts, delayMs) {
       taskProbe("transform"); transform(spark, views, conf)
     }
+  }
+
+  /** Empty the lake, then drop the database AND its on-disk location:
+    * the in-memory catalog forgets tables across JVMs while their files
+    * persist, and saveAsTable refuses a "new" managed table over a
+    * leftover location.
+    */
+  private def reset(spark: SparkSession, conf: Config): Unit = {
+    deleteDir(spark, conf.lakePath)
+    spark.sql(s"DROP DATABASE IF EXISTS ${conf.database} CASCADE")
+    deleteDir(spark,
+      s"${spark.conf.get("spark.sql.warehouse.dir")}/${conf.database}.db")
   }
 
   /** Every path (files AND directories) under `root`, recursively. */
@@ -208,10 +214,10 @@ object Pipeline {
 
   /** The 5-minute variant as a REAL incremental pipeline (SURVEY §3.3 /
     * optimized_extract.py:117-141): JSON response files dropped into
-    * `jsonDir` become one micro-batch each (wholetext file source) —
-    * flatten/drops via the same expressions as the batch path, then
-    * `foreachBatch` reuses the batch lake writer verbatim, stamping the
-    * batch-constant timestamp per micro-batch (P5 semantics). The
+    * `jsonDir` become one micro-batch each (wholetext file source), and
+    * `foreachBatch` runs the batch path on each: `Ingest.transformItems`
+    * (flatten, the batch-constant timestamp of P5, drops), then the
+    * same lake append as `extractBatch`. The
     * checkpoint makes file pickup exactly-once — the guarantee the
     * reference's read-concat-rewrite loop lacked.
     *
@@ -225,16 +231,10 @@ object Pipeline {
       org.apache.spark.sql.streaming.StreamingQuery = {
     val responses = spark.readStream
       .option("wholetext", "true").text(jsonDir)
-    val items = Ingest.itemsOf(responses)
-    val flat = graft.ingest.Flatten.loopdict(items)
-      .drop(Ingest.dropCols: _*)
-    flat.writeStream
+    Ingest.itemsOf(responses).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val tagged = batch.withColumn("timestamp",
-          org.apache.spark.sql.functions.lit(batchTs(id)))
-        if (conf.csvLake) Lake.appendBatchCsv(tagged, conf.lakePath)
-        else Lake.appendBatch(tagged, conf.lakePath)
+        append(Ingest.transformItems(batch, batchTs(id)), conf)
       }
       .trigger(trigger)
       .start()

@@ -660,38 +660,17 @@ object PipelineQueries {
       (s, d) => {
         import graft.warehouse.Warehouse
         import graft.streaming.BatchState
-        val run = streamSinkRuns.incrementAndGet()
         val ev = Tables(s, d, "events").select(col("user_id"),
           round(col("value") * 10000).cast("long").as("vbp"))
         val feed = graft.util.FeedCache.ensure("q101_feed", d) { p =>
           ev.repartition(3).write.mode("overwrite").parquet(p) }
-        val stateBase = graft.util.TmpDirs.perProcess(s"graft_q101_state_$run")
-        val comps = Seq("state")
-        val stream = s.readStream.schema(s.read.parquet(feed).schema)
-          .option("maxFilesPerTrigger", "1").parquet(feed)
-        val query = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+        val Seq(st) = BatchState.fold(s, feed, "q101", Seq("state")) {
+          (batch, prev) =>
             val partial = Warehouse.aggState(batch, Seq("user_id"), col("vbp"))
-            val merged = BatchState.prevId(stateBase, comps, batchId) match {
-              case None => partial
-              case Some(p) => Warehouse.mergeAggState(
-                Seq(s.read.parquet(BatchState.dir(stateBase, "state", p)),
-                  partial),
-                Seq("user_id"))
-            }
-            merged.write.mode("overwrite")
-              .parquet(BatchState.dir(stateBase, "state", batchId))
-            BatchState.gc(stateBase, comps, batchId)
-            ()
-          }
-          .option("checkpointLocation",
-            graft.util.TmpDirs.perProcess(s"graft_q101_ckpt_$run"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        s.read.parquet(BatchState.dir(stateBase, "state",
-            BatchState.lastId(stateBase, comps, "q101")))
-          .select(col("user_id"), col("n_rows").as("n_events"),
+            Seq(prev.fold(partial)(p =>
+              Warehouse.mergeAggState(p :+ partial, Seq("user_id"))))
+        }
+        st.select(col("user_id"), col("n_rows").as("n_events"),
             (col("total_bp") / 10000.0).as("total_value"))
           .orderBy("user_id")
       },
@@ -758,7 +737,6 @@ object PipelineQueries {
     Q("q123_streaming_cdc_apply",
       (s, d) => {
         import graft.warehouse.Warehouse
-        val run = streamSinkRuns.incrementAndGet()
         // (k, linenumber) is NOT unique in the feed, so the version
         // ENCODES the payload (ln, cents, op-flag): version ties are
         // then payload-identical and the winner's content deterministic
@@ -775,33 +753,12 @@ object PipelineQueries {
           .drop("ln")
         val feed = graft.util.FeedCache.ensure("q123_feed", d) { p =>
           changes.repartition(4).write.mode("overwrite").parquet(p) }
-        val stateBase = graft.util.TmpDirs.perProcess(s"graft_q123_state_$run")
-        val BS = graft.streaming.BatchState
-        val comps = Seq("state")
-        val stream = s.readStream.schema(s.read.parquet(feed).schema)
-          .option("maxFilesPerTrigger", "1").parquet(feed)
-        val query = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            val merged = BS.prevId(stateBase, comps, batchId) match {
-              case None =>
-                Warehouse.upsert(batch.limit(0), batch, Seq("k"), "ver")
-              case Some(p) => Warehouse.upsert(
-                s.read.parquet(BS.dir(stateBase, "state", p)),
-                batch, Seq("k"), "ver")
-            }
-            merged.write.mode("overwrite")
-              .parquet(BS.dir(stateBase, "state", batchId))
-            BS.gc(stateBase, comps, batchId)
-            ()
+        val Seq(st) = graft.streaming.BatchState
+          .fold(s, feed, "q123", Seq("state")) { (batch, prev) =>
+            val target = prev.fold(batch.limit(0))(_.head)
+            Seq(Warehouse.upsert(target, batch, Seq("k"), "ver"))
           }
-          .option("checkpointLocation",
-            graft.util.TmpDirs.perProcess(s"graft_q123_ckpt_$run"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        s.read.parquet(BS.dir(stateBase, "state",
-            BS.lastId(stateBase, comps, "q123")))
-          .filter(col("op") =!= "d")
+        st.filter(col("op") =!= "d")
           .select("k", "cents")
           .orderBy("k")
       },
@@ -932,7 +889,6 @@ object PipelineQueries {
     Q("q141_streaming_drift",
       (s, d) => {
         import graft.functions.IntMath
-        val run = streamSinkRuns.incrementAndGet()
         val k = 20
         val e = Tables(s, d, "events").select(col("event_type").as("g"),
           col("ts"), round(col("value") * 100, 0).cast("long").as("cents"))
@@ -949,32 +905,12 @@ object PipelineQueries {
           .drop("ts")
         val feed = graft.util.FeedCache.ensure("q141_feed", d) { p =>
           live.repartition(3).write.mode("overwrite").parquet(p) }
-        val stateBase = graft.util.TmpDirs.perProcess(s"graft_q141_state_$run")
-        val BS = graft.streaming.BatchState
-        val comps = Seq("state")
-        val stream = s.readStream.schema(s.read.parquet(feed).schema)
-          .option("maxFilesPerTrigger", "1").parquet(feed)
-        val query = stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+        val Seq(liveCnt) = graft.streaming.BatchState
+          .fold(s, feed, "q141", Seq("state")) { (batch, prev) =>
             val part = bucketed(batch)
-            val merged = BS.prevId(stateBase, comps, batchId) match {
-              case None => part
-              case Some(p) => s.read.parquet(BS.dir(stateBase, "state", p))
-                .unionByName(part)
-                .groupBy("g", "bkt").agg(sum("n").as("n"))
-            }
-            merged.write.mode("overwrite")
-              .parquet(BS.dir(stateBase, "state", batchId))
-            BS.gc(stateBase, comps, batchId)
-            ()
+            Seq(prev.fold(part)(_.head.unionByName(part)
+              .groupBy("g", "bkt").agg(sum("n").as("n"))))
           }
-          .option("checkpointLocation",
-            graft.util.TmpDirs.perProcess(s"graft_q141_ckpt_$run"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val liveCnt = s.read.parquet(BS.dir(stateBase, "state",
-          BS.lastId(stateBase, comps, "q141")))
         val j = refCnt.select(col("g"), col("bkt"), col("n").as("n1"))
           .join(liveCnt.select(col("g"), col("bkt"), col("n").as("n2")),
             Seq("g", "bkt"), "full_outer")
@@ -1036,7 +972,7 @@ object PipelineQueries {
   private lazy val q273 = Q("q273_topk_ivm_refill",
     (s, d) => {
       import graft.functions.TextFunctions.hash60
-      val run = streamSinkRuns.incrementAndGet()
+      import graft.operators.TopKState
       val k = 10
       val bCap = 2 * k
       val base0 = Tables(s, d, "orders").select(
@@ -1059,39 +995,16 @@ object PipelineQueries {
         .select("b", "pri", "id", "v", "sign")
       val feed = graft.util.FeedCache.ensure("q273_feed", d) { p =>
         writeBatchOrdered(signed, "b", 4, p) }
-      val stateBase = graft.util.TmpDirs.perProcess(s"graft_q273_state_$run")
-      val BS = graft.streaming.BatchState
-      val comps = Seq("buf", "meta")
-      val stream = s.readStream.schema(s.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-      val query = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val (bufP, metaP) = BS.prevId(stateBase, comps, batchId) match {
-            case None => graft.operators.TopKState
-              .emptyState(batch, Seq("pri"))
-            case Some(p) => (
-              s.read.parquet(BS.dir(stateBase, "buf", p)),
-              s.read.parquet(BS.dir(stateBase, "meta", p)))
+      val Seq(buf, meta) = graft.streaming.BatchState
+        .fold(s, feed, "q273", Seq("buf", "meta")) { (batch, prev) =>
+          val (bufP, metaP) = prev match {
+            case Some(Seq(b, m)) => (b, m)
+            case _ => TopKState.emptyState(batch, Seq("pri"))
           }
-          val (bufN, metaN) = graft.operators.TopKState
-            .step(bufP, metaP, batch, Seq("pri"), bCap)
-          bufN.write.mode("overwrite")
-            .parquet(BS.dir(stateBase, "buf", batchId))
-          metaN.write.mode("overwrite")
-            .parquet(BS.dir(stateBase, "meta", batchId))
-          BS.gc(stateBase, comps, batchId)
-          ()
+          val (bufN, metaN) = TopKState.step(bufP, metaP, batch, Seq("pri"), bCap)
+          Seq(bufN, metaN)
         }
-        .option("checkpointLocation",
-          graft.util.TmpDirs.perProcess(s"graft_q273_ckpt_$run"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      val last = BS.lastId(stateBase, comps, "q273")
-      graft.operators.TopKState.topkWithRefill(
-          s.read.parquet(BS.dir(stateBase, "buf", last)),
-          s.read.parquet(BS.dir(stateBase, "meta", last)),
-          s.read.parquet(feed), Seq("pri"), k)
+      TopKState.topkWithRefill(buf, meta, s.read.parquet(feed), Seq("pri"), k)
         .orderBy("pri", "rnk")
     },
     Some("""WITH o AS MATERIALIZED (SELECT o_orderpriority AS pri,
@@ -1260,38 +1173,18 @@ object PipelineQueries {
   private lazy val q204 = Q("q204_streaming_checksum",
     (s, d) => {
       import graft.operators.Integrity
-      val run = streamSinkRuns.incrementAndGet()
       val docs = Tables(s, d, "documents")
         .select(col("source"), col("doc_id"), col("lang"), col("n_chars"),
           col("text"))
       val feed = graft.util.FeedCache.ensure("q204_feed", d) { p =>
         docs.repartition(3).write.mode("overwrite").parquet(p) }
-      val stateBase = graft.util.TmpDirs.perProcess(s"graft_q204_state_$run")
-      val BS = graft.streaming.BatchState
-      val comps = Seq("state")
-      val stream = s.readStream.schema(s.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-      val query = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+      val Seq(st) = graft.streaming.BatchState
+        .fold(s, feed, "q204", Seq("state")) { (batch, prev) =>
           val partial = Integrity.checksumState(batch, col("source"),
             Seq(col("doc_id"), col("lang"), col("n_chars"), col("text")))
-          val merged = BS.prevId(stateBase, comps, batchId) match {
-            case None => partial
-            case Some(p) => Integrity.mergeChecksumState(
-              Seq(s.read.parquet(BS.dir(stateBase, "state", p)), partial))
-          }
-          merged.write.mode("overwrite")
-            .parquet(BS.dir(stateBase, "state", batchId))
-          BS.gc(stateBase, comps, batchId)
-          ()
+          Seq(prev.fold(partial)(p => Integrity.mergeChecksumState(p :+ partial)))
         }
-        .option("checkpointLocation",
-          graft.util.TmpDirs.perProcess(s"graft_q204_ckpt_$run"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      Integrity.finishChecksum(s.read.parquet(BS.dir(stateBase, "state",
-          BS.lastId(stateBase, comps, "q204"))))
+      Integrity.finishChecksum(st)
         .select(col("grp").as("source"), col("n_rows"), col("checksum"))
         .orderBy("source")
     },
@@ -1322,39 +1215,18 @@ object PipelineQueries {
   // one-pass batch distribution — the oracle IS the batch computation.
   private lazy val q228 = Q("q228_streaming_percentiles",
     (s, d) => {
-      val run = streamSinkRuns.incrementAndGet()
       val ord = Tables(s, d, "orders").select(
         col("o_orderpriority").as("pri"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       val feed = graft.util.FeedCache.ensure("q228_feed", d) { p =>
         ord.repartition(3).write.mode("overwrite").parquet(p) }
-      val stateBase = graft.util.TmpDirs.perProcess(s"graft_q228_state_$run")
-      val BS = graft.streaming.BatchState
-      val comps = Seq("state")
-      val stream = s.readStream.schema(s.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-      val query = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+      val Seq(st) = graft.streaming.BatchState
+        .fold(s, feed, "q228", Seq("state")) { (batch, prev) =>
           val partial = batch.groupBy("pri", "cents")
             .agg(count(lit(1)).cast("long").as("n"))
-          val merged = BS.prevId(stateBase, comps, batchId) match {
-            case None => partial
-            case Some(p) => s.read.parquet(BS.dir(stateBase, "state", p))
-              .unionByName(partial)
-              .groupBy("pri", "cents").agg(sum("n").as("n"))
-          }
-          merged.write.mode("overwrite")
-            .parquet(BS.dir(stateBase, "state", batchId))
-          BS.gc(stateBase, comps, batchId)
-          ()
+          Seq(prev.fold(partial)(_.head.unionByName(partial)
+            .groupBy("pri", "cents").agg(sum("n").as("n"))))
         }
-        .option("checkpointLocation",
-          graft.util.TmpDirs.perProcess(s"graft_q228_ckpt_$run"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      val st = s.read.parquet(BS.dir(stateBase, "state",
-        BS.lastId(stateBase, comps, "q228")))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("pri").orderBy("cents")
       val tot = st.groupBy("pri").agg(sum("n").as("tn"))
@@ -1459,8 +1331,6 @@ object PipelineQueries {
     (s, d) => {
       import graft.functions.TextFunctions.hash60
       import graft.warehouse.Warehouse
-      val BS = graft.streaming.BatchState
-      val run = streamSinkRuns.incrementAndGet()
       val ev = Tables(s, d, "events").select(
         col("event_type"),
         round(col("value") * 10000).cast("long").as("vbp"),
@@ -1474,34 +1344,14 @@ object PipelineQueries {
           .select(col("event_type"), col("vbp"), lit(-1L).as("sign")))
       val feed = graft.util.FeedCache.ensure("q270_feed", d) { p =>
         signed.repartition(3).write.mode("overwrite").parquet(p) }
-      val stateBase = graft.util.TmpDirs.perProcess(s"graft_q270_state_$run")
-      val comps = Seq("support")
-      val stream = s.readStream.schema(s.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-      val query = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+      val Seq(support) = graft.streaming.BatchState
+        .fold(s, feed, "q270", Seq("support")) { (batch, prev) =>
           val partial = Warehouse.supportState(
             batch, Seq("event_type"), col("vbp"))
-          val merged = BS.prevId(stateBase, comps, batchId) match {
-            case None => partial
-            case Some(p) => Warehouse.mergeSupportState(
-              Seq(s.read.parquet(BS.dir(stateBase, "support", p)), partial),
-              Seq("event_type"))
-          }
-          merged.write.mode("overwrite")
-            .parquet(BS.dir(stateBase, "support", batchId))
-          BS.gc(stateBase, comps, batchId)
-          ()
+          Seq(prev.fold(partial)(p =>
+            Warehouse.mergeSupportState(p :+ partial, Seq("event_type"))))
         }
-        .option("checkpointLocation",
-          graft.util.TmpDirs.perProcess(s"graft_q270_ckpt_$run"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      Warehouse.distinctViewFromSupport(
-          s.read.parquet(BS.dir(stateBase, "support",
-            BS.lastId(stateBase, comps, "q270"))),
-          Seq("event_type"))
+      Warehouse.distinctViewFromSupport(support, Seq("event_type"))
         .orderBy("event_type")
     },
     Some("""WITH e AS (SELECT event_type,
@@ -1523,7 +1373,6 @@ object PipelineQueries {
   private lazy val q252 = Q("q252_streaming_cms_hh",
     (s, d) => {
       import graft.functions.TextFunctions.{words, hash60}
-      val run = streamSinkRuns.incrementAndGet()
       val cmsD = 4
       val cmsW = 256
       def probeCells(df: DataFrame): DataFrame =
@@ -1536,19 +1385,10 @@ object PipelineQueries {
       val docs = Tables(s, d, "documents").select("doc_id", "text")
       val feed = graft.util.FeedCache.ensure("q252_feed", d) { p =>
         docs.repartition(3).write.mode("overwrite").parquet(p) }
-      val stateBase = graft.util.TmpDirs.perProcess(s"graft_q252_state_$run")
-      // RESTART-SAFE state resolution (round-9 advisor, factored as
-      // graft.streaming.BatchState): state dirs keyed BY batchId
-      // (cells_<id>/dict_<id>), "committed" = both dirs carry their
-      // _SUCCESS marker; each batch merges from the latest committed
-      // id strictly below its own. Footprint here is
-      // (#batches × ≤(d·w + |vocab|) rows).
-      val BS = graft.streaming.BatchState
-      val comps = Seq("cells", "dict")
-      val stream = s.readStream.schema(s.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-      val query = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      // Persisted state: cells_<id>/dict_<id> under BatchState, so the
+      // footprint is two snapshots of ≤(d·w + |vocab|) rows.
+      val Seq(cells, dict) = graft.streaming.BatchState
+        .fold(s, feed, "q252", Seq("cells", "dict")) { (batch, prev) =>
           val termCnt = batch
             .select(explode(words(col("text"))).as("term"))
             .filter(length(col("term")) > 0)
@@ -1557,30 +1397,14 @@ object PipelineQueries {
             .join(termCnt, "term")
             .groupBy("r", "bkt").agg(sum("cnt").as("bsum"))
           val dict = termCnt.select("term")
-          val (mCells, mDict) = BS.prevId(stateBase, comps, batchId) match {
-            case None => (cells, dict)
-            case Some(p) => (
-              s.read.parquet(BS.dir(stateBase, "cells", p))
-                .unionByName(cells)
+          prev match {
+            case Some(Seq(pCells, pDict)) => Seq(
+              pCells.unionByName(cells)
                 .groupBy("r", "bkt").agg(sum("bsum").as("bsum")),
-              s.read.parquet(BS.dir(stateBase, "dict", p))
-                .unionByName(dict).distinct())
+              pDict.unionByName(dict).distinct())
+            case _ => Seq(cells, dict)
           }
-          mCells.write.mode("overwrite")
-            .parquet(BS.dir(stateBase, "cells", batchId))
-          mDict.write.mode("overwrite")
-            .parquet(BS.dir(stateBase, "dict", batchId))
-          BS.gc(stateBase, comps, batchId)
-          ()
         }
-        .option("checkpointLocation",
-          graft.util.TmpDirs.perProcess(s"graft_q252_ckpt_$run"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      val last = BS.lastId(stateBase, comps, "q252")
-      val cells = s.read.parquet(BS.dir(stateBase, "cells", last))
-      val dict = s.read.parquet(BS.dir(stateBase, "dict", last))
       val est = probeCells(dict)
         .join(broadcast(cells), Seq("r", "bkt"))
         .groupBy("term").agg(min("bsum").as("cms_est"))

@@ -184,20 +184,18 @@ class LakeWarehouseSpec extends SparkSpec {
     val rows = Seq(("g1", 1L, 1L), ("g1", 1L, 1L), ("g1", 2L, 1L),
       ("g2", 3L, 1L), ("g1", 1L, -1L), ("g1", 2L, -1L),
       ("g2", 4L, 1L), ("g2", 3L, -1L))
+    def step(stateBase: String, batch: Seq[(String, Long, Long)],
+             id: Long): Unit =
+      BatchState.step(spark, stateBase, Seq("support"), id) { prev =>
+        val partial = Warehouse.supportState(
+          batch.toDF("g", "u", "sign"), Seq("g"), col("u"))
+        Seq(prev.fold(partial)(p =>
+          Warehouse.mergeSupportState(p :+ partial, Seq("g"))))
+      }
     def run(stateBase: String, splits: Seq[Seq[(String, Long, Long)]])
         : Seq[(String, Long, Long, Long)] = {
       splits.zipWithIndex.foreach { case (batch, i) =>
-        val b = batch.toDF("g", "u", "sign")
-        val partial = Warehouse.supportState(b, Seq("g"), col("u"))
-        val merged = BatchState.prevId(stateBase, Seq("support"), i) match {
-          case None => partial
-          case Some(p) => Warehouse.mergeSupportState(
-            Seq(spark.read.parquet(BatchState.dir(stateBase, "support", p)),
-              partial), Seq("g"))
-        }
-        merged.write.mode("overwrite")
-          .parquet(BatchState.dir(stateBase, "support", i))
-        BatchState.gc(stateBase, Seq("support"), i)
+        step(stateBase, batch, i.toLong)
       }
       Warehouse.distinctViewFromSupport(
           spark.read.parquet(BatchState.dir(stateBase, "support",
@@ -228,14 +226,7 @@ class LakeWarehouseSpec extends SparkSpec {
     // retry of the final batch (id 2) after its gc: merges from 1,
     // overwrites only support_2, view unchanged
     assert(BatchState.prevId(three, Seq("support"), 2L) === Some(1L))
-    val b2 = rows.drop(6).toDF("g", "u", "sign")
-    val partial2 = Warehouse.supportState(b2, Seq("g"), col("u"))
-    val merged2 = Warehouse.mergeSupportState(
-      Seq(spark.read.parquet(BatchState.dir(three, "support", 1L)), partial2),
-      Seq("g"))
-    merged2.write.mode("overwrite")
-      .parquet(BatchState.dir(three, "support", 2L))
-    BatchState.gc(three, Seq("support"), 2L)
+    step(three, rows.drop(6), 2L)
     val vRetry = Warehouse.distinctViewFromSupport(
         spark.read.parquet(BatchState.dir(three, "support", 2L)), Seq("g"))
       .orderBy("g").collect()

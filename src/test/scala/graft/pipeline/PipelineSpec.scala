@@ -225,8 +225,13 @@ class PipelineSpec extends SparkSpec {
     val chans = Lake.channels(spark, conf.lakePath)
     assert(chans === Seq("Case_One", "case_one"))
     val table = s"${conf.database}.case_one_raw"
-    assert(Pipeline.loadWarehouse(spark, conf) === Seq(table, table))
+    val tables = Pipeline.loadWarehouse(spark, conf)
+    assert(tables === Seq(table))
     assertLoaded(conf, chans.takeRight(1))
+    // the mart holds the surviving channel's rows once, not once per key
+    val mart = Pipeline.transform(spark,
+      Pipeline.registerStaging(spark, tables), conf)
+    assert(mart.count() === nBatches)
   }
 
   test("retries are bounded: attempts exhausted rethrows the last failure") {

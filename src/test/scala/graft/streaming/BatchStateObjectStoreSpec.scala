@@ -64,19 +64,13 @@ class BatchStateObjectStoreSpec extends SparkSpec {
     val rows = Seq(("g1", 1L, 1L), ("g1", 1L, 1L), ("g1", 2L, 1L),
       ("g2", 3L, 1L), ("g1", 1L, -1L), ("g1", 2L, -1L),
       ("g2", 4L, 1L), ("g2", 3L, -1L))
-    def step(batch: Seq[(String, Long, Long)], id: Long): Unit = {
-      val partial = Warehouse.supportState(
-        batch.toDF("g", "u", "sign"), Seq("g"), col("u"))
-      val merged = BatchState.prevId(base, Seq("support"), id) match {
-        case None => partial
-        case Some(p) => Warehouse.mergeSupportState(
-          Seq(spark.read.parquet(BatchState.dir(base, "support", p)),
-            partial), Seq("g"))
+    def step(batch: Seq[(String, Long, Long)], id: Long): Unit =
+      BatchState.step(spark, base, Seq("support"), id) { prev =>
+        val partial = Warehouse.supportState(
+          batch.toDF("g", "u", "sign"), Seq("g"), col("u"))
+        Seq(prev.fold(partial)(p =>
+          Warehouse.mergeSupportState(p :+ partial, Seq("g"))))
       }
-      merged.write.mode("overwrite")
-        .parquet(BatchState.dir(base, "support", id))
-      BatchState.gc(base, Seq("support"), id)
-    }
     Seq(rows.take(3), rows.slice(3, 6), rows.drop(6))
       .zipWithIndex.foreach { case (b, i) => step(b, i.toLong) }
     // two-snapshot steady state, resolved through the bucket FS

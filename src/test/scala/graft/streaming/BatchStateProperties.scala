@@ -53,18 +53,13 @@ object BatchStateProperties extends Properties("graft.batchstate") {
       def batchRows(b: Int): Seq[(String, Long, Long)] =
         c.lives.filter(_.ins == b).map(l => (l.g, l.v, 1L)) ++
           c.lives.filter(_.del.contains(b)).map(l => (l.g, l.v, -1L))
-      def step(b: Int): Unit = {
-        val partial = Warehouse.supportState(
-          batchRows(b).toDF("g", "u", "sign"), Seq("g"), col("u"))
-        val merged = BatchState.prevId(base, comps, b.toLong) match {
-          case None => partial
-          case Some(p) => Warehouse.mergeSupportState(
-            Seq(spark.read.parquet(BatchState.dir(base, "support", p)),
-              partial), Seq("g"))
+      def step(b: Int): Unit =
+        BatchState.step(spark, base, comps, b.toLong) { prev =>
+          val partial = Warehouse.supportState(
+            batchRows(b).toDF("g", "u", "sign"), Seq("g"), col("u"))
+          Seq(prev.fold(partial)(p =>
+            Warehouse.mergeSupportState(p :+ partial, Seq("g"))))
         }
-        merged.write.mode("overwrite")
-          .parquet(BatchState.dir(base, "support", b.toLong))
-      }
       (0 until c.nb).foreach { b =>
         if (c.crash(b)) {
           // mid-commit crash: dir written, _SUCCESS never lands
@@ -75,8 +70,7 @@ object BatchStateProperties extends Properties("graft.batchstate") {
             spark.sessionState.newHadoopConf()).delete(marker, false)
         }
         step(b) // the (re)try that commits
-        BatchState.gc(base, comps, b.toLong)
-        if (c.rerun(b)) { step(b); BatchState.gc(base, comps, b.toLong) }
+        if (c.rerun(b)) step(b)
       }
       val committed = BatchState.committedIds(base, comps)
       val got = Warehouse.distinctViewFromSupport(

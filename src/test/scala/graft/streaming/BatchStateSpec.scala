@@ -1,14 +1,15 @@
 package graft.streaming
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Pins the restart/retry semantics the mergeable-state monitors
-  * (q101/q123/q141/q204/q228/q252) rely on: commit = ALL component
-  * dirs carry _SUCCESS; a retried batch merges from its STRICT
-  * predecessor (never the dir it is about to overwrite); an empty
-  * state resolves loudly, not as silent emptiness.
+  * (q101/q123/q141/q204/q228/q252/q270/q273) rely on: commit = ALL
+  * component dirs carry _SUCCESS; a retried batch merges from its
+  * STRICT predecessor (never the dir it is about to overwrite); an
+  * empty state resolves loudly, not as silent emptiness.
   */
-class BatchStateSpec extends AnyFunSuite {
+class BatchStateSpec extends graft.SparkSpec {
 
   private def mk(base: String, comp: String, id: Long,
                  success: Boolean): Unit = {
@@ -93,5 +94,50 @@ class BatchStateSpec extends AnyFunSuite {
       BatchState.lastId(base, Seq("state"), "q999"))
     assert(e.getMessage.contains("no committed state"))
     assert(BatchState.committedIds(s"$base/nope", Seq("state")).isEmpty)
+  }
+
+  test("step: a write that throws leaves the batch uncommitted; its retry " +
+      "commits the failure-free state") {
+    val comps = Seq("cells", "dict")
+    // a two-component merge in q252's shape: summed cells, unioned dict
+    def frames(id: Long, prev: Option[Seq[DataFrame]]): Seq[DataFrame] = {
+      val cells = spark.range(id * 10, id * 10 + 5)
+        .select((col("id") % 3).as("k"), lit(1L).as("n"))
+      val dict = spark.range(id, id + 3).toDF("term")
+      prev match {
+        case Some(Seq(pc, pd)) => Seq(
+          pc.unionByName(cells).groupBy("k").agg(sum("n").as("n")),
+          pd.unionByName(dict).distinct())
+        case _ => Seq(cells, dict)
+      }
+    }
+    def rows(base: String): Seq[Seq[String]] =
+      BatchState.latest(spark, base, comps, "t")
+        .map(_.collect().map(_.toString).sorted.toSeq)
+
+    val clean = tmp()
+    (0L to 2L).foreach(id => BatchState.step(spark, clean, comps, id)(frames(id, _)))
+
+    val failed = tmp()
+    (0L to 1L).foreach(id => BatchState.step(spark, failed, comps, id)(frames(id, _)))
+    val before = rows(failed)
+    val e = intercept[Exception] {
+      BatchState.step(spark, failed, comps, 2L) { prev =>
+        val Seq(c, d) = frames(2L, prev)
+        Seq(c, d.withColumn("term", raise_error(lit("injected")).cast("long")))
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected")), e)
+    // cells_2 committed, dict_2 did not: batch 2 is not committed, no gc
+    // ran, and the predecessor resolves and reads as before
+    assert(new java.io.File(BatchState.dir(failed, "cells", 2), "_SUCCESS").exists)
+    assert(BatchState.committedIds(failed, comps) === Seq(0L, 1L))
+    assert(BatchState.lastId(failed, comps, "t") === 1L)
+    assert(rows(failed) === before)
+    // the retry of batch 2 merges from 1 and lands on the clean run's state
+    BatchState.step(spark, failed, comps, 2L)(frames(2L, _))
+    assert(BatchState.committedIds(failed, comps) === Seq(1L, 2L))
+    assert(rows(failed) === rows(clean))
   }
 }

@@ -1,15 +1,18 @@
 #!/usr/bin/env bash
-# The standing end-of-round gate: compile + unit tests + oracle compare
-# at BOTH sf0.01 and sf0.1. The sf0.1 pass exists because cross-engine
-# rounding-boundary bugs (a value landing within 1 ulp of a .00005
-# boundary flips round(x,4) between JVM and DuckDB libm) are invisible
-# at sf0.01 row counts — q31's history. Run before every round-end
-# commit; every stage must be green.
+# The standing end-of-round gate: compile + unit tests + the benchmark
+# harness's self-tests + oracle compare at BOTH sf0.01 and sf0.1. The
+# sf0.1 pass exists because cross-engine rounding-boundary bugs (a value
+# landing within 1 ulp of a .00005 boundary flips round(x,4) between JVM
+# and DuckDB libm) are invisible at sf0.01 row counts — q31's history.
+# Run before every round-end commit; every stage must be green.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== sbt compile + test =="
 sbt -batch test
+
+echo "== benchmark harness self-tests =="
+python3 -m unittest discover -s perfbench/tests
 
 echo "== Verify + selfcheck @ sf0.01 =="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_sf001" \
