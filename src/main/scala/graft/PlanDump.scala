@@ -17,8 +17,8 @@ import graft.util.Session
   * AdaptiveSparkPlan shows isFinalPlan=false shapes that never run.
   *
   * Loop-body evidence: when SPARK_GRAFT_PLAN_PROBE_DIR is set, it is
-  * forwarded to -Dgraft.plan.probe.dir, and the checkpointed loop
-  * operators (Graph.* rounds) write their UNMATERIALIZED per-round
+  * forwarded to -Dgraft.plan.probe.dir, and every loop driven by
+  * `graft.operators.Iterate.rounds` writes its UNMATERIALIZED per-round
   * plans there while the query builds — the r14 verdict's fix for
   * before/after dumps that were identical checkpoint scans.
   *

@@ -32,19 +32,21 @@ import org.apache.spark.sql.functions._
   *     over-wide groups and SAY SO" rather than "refuse the job";
   *  5. CACHE RELEASE (the one convention, applied by every guarded
   *     operator): the shared frame the guard and the fan-out both
-  *     read is `.cache()`d so the guard costs one scan. An operator
+  *     read is `.cache()`d so the guard costs one scan, and no
+  *     operator unpersists its plain caches before returning. One
   *     whose OUTPUT is materialized inside it (frequentTriples'
-  *     localCheckpointed top-k, Bpe.learnMerges' merge table)
-  *     unpersists its intermediates before returning — nothing the
-  *     caller holds still references them. An operator returning a
-  *     LAZY corpus-scale frame (basketPairs, skipGramPairs,
-  *     sortedNeighborhoodPairs, editDistanceJoin, ngramJaccard)
-  *     cannot: the returned plan still reads the cache, and
-  *     unpersisting pre-consumption would silently re-pay the build
-  *     per downstream action. Those document the caller contract —
-  *     release via `spark.catalog.clearCache()` (the Verify/Bench
-  *     runners') or `.unpersist` after materializing — at the
-  *     `.cache()` site, citing this rule.
+  *     localCheckpointed top-k, Bpe.learnMerges' merge table) could —
+  *     nothing the caller holds still reads them — but does not: each
+  *     `Dataset.unpersist` re-canonicalizes every cached plan, seconds
+  *     per sweep on deep lineages (r15, the kHopFrontiers finding).
+  *     One returning a LAZY corpus-scale frame (basketPairs,
+  *     skipGramPairs, sortedNeighborhoodPairs, editDistanceJoin,
+  *     ngramJaccard) cannot: the returned plan still reads the cache,
+  *     and unpersisting pre-consumption would silently re-pay the
+  *     build per downstream action. Either way release is the
+  *     caller's — `spark.catalog.clearCache()` (the Verify/Bench
+  *     runners') or `.unpersist` after materializing — documented at
+  *     the `.cache()` site, citing this rule.
   */
 object AdmissionGuard {
 

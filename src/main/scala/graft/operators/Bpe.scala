@@ -52,7 +52,6 @@ object Bpe {
     require(rounds >= 1, "learnMerges needs at least one round")
     var seqs = vocab.select(col("f"), encodeSeq(col("wd")).as("seq"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cached = scala.collection.mutable.ArrayBuffer(seqs)
     var winners = Vector.empty[DataFrame]
     for (r <- 1 to rounds) {
       val pairs = seqs
@@ -72,7 +71,6 @@ object Bpe {
               lit(" "))))
           .select(col("f"), col("seq"))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        cached += seqs
       }
     }
     val out = winners.reduce(_.unionAll(_)).orderBy("merge_round")

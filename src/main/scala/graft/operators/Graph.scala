@@ -13,39 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Free the block-manager storage of a localCheckpoint'd frame NOW
-    * instead of at GC: the checkpoint blocks hang off the wrapped
-    * `LogicalRDD`'s RDD, which `Dataset.unpersist` (a CacheManager
-    * lookup) never touches. Falls back to plain unpersist for frames
-    * that are ordinary cached plans.
-    */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => df.unpersist(blocking = false)
-    }
-
-  /** Dev-only plan evidence for checkpointed loops (the r14 verdict's
-    * plan-evidence gap): the shipped queries materialize every round
-    * through `localCheckpoint`, so their dumped plans are just
-    * checkpoint scans — this hook writes the UNMATERIALIZED round-body
-    * plan (the q218 `materialize=false` staircase pattern) when
-    * `-Dgraft.plan.probe.dir=<dir>` is set (PlanDump sets it from
-    * SPARK_GRAFT_PLAN_PROBE_DIR). A no-op in every production/bench
-    * path: the property is never set there, and the probe costs one
-    * string render, no job.
-    */
-  private[graft] def probeRoundPlan(tag: String, round: Int,
-                                    df: DataFrame): Unit =
-    sys.props.get("graft.plan.probe.dir").foreach { d =>
-      val p = java.nio.file.Paths.get(d, s"${tag}_round$round.txt")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    }
-
-
   /** Co-occurrence edges: distinct undirected item pairs sharing a
     * group (e.g. parts sharing an order). Output one row per ordered
     * direction (u, v) plus each source's out-degree — the shape the
@@ -117,27 +84,24 @@ object Graph {
     // measured-|V| broadcast gate for the loop frames (see `gated`)
     val nNodes = nodes.count()
     val seed = nodes.agg(min("node").as("seed"))
-    var score = nodes.crossJoin(broadcast(seed))
+    val init = nodes.crossJoin(broadcast(seed))
       .select(col("node"), col("du"), col("seed"),
         when(col("node") === col("seed"), lit(1000000000L))
           .otherwise(lit(0L)).as("s"))
-    for (it <- 1 to iters) {
+    Iterate.rounds("q209_personalized_pagerank", iters, init) { score =>
       val contrib = score.filter(col("s") > 0)
         .select(col("node").as("u"), expr("s div du").as("c"))
       val inbound = e.select("u", "v").join(gated(contrib, nNodes), "u")
         .groupBy("v").agg(sum("c").as("inc"))
         .withColumnRenamed("v", "node")
-      val step = score.select("node", "du", "seed")
+      score.select("node", "du", "seed")
         .join(gated(inbound, nNodes), Seq("node"), "left")
         .withColumn("s",
           when(col("node") === col("seed"), lit(150000000L))
             .otherwise(lit(0L)) +
           expr("(85 * coalesce(inc, CAST(0 AS BIGINT))) div 100"))
         .drop("inc")
-      probeRoundPlan("q209_personalized_pagerank", it, step)
-      score = step.localCheckpoint(eager = true)
-    }
-    score.filter(col("s") > 0 && col("node") =!= col("seed"))
+    }.last.filter(col("s") > 0 && col("node") =!= col("seed"))
       .select(col("node"), col("s").as("ppr"))
       .orderBy(col("ppr").desc, col("node"))
       .limit(k)
@@ -368,28 +332,25 @@ object Graph {
     val nNodes = nodes.count()
     val init = if (nNodes == 0) 0L else 1000000000L / nNodes
     val tele = (15L * init) / 100L
-    var score = nodes
+    val start = nodes
       .select(col("node"), col("du"),
         lit(init).as("s"), lit(tele).as("tele"))
-    for (it <- 1 to iters) {
+    // Each superstep's score table (|nodes| rows) is checkpointed by
+    // Iterate: without it the lineage of iteration i re-executes
+    // iterations 1..i-1 — O(iters²) join work (measured 10.4 s -> ~5 s
+    // at sf0.1, 3 iters). The cluster-scale form checkpoints every few
+    // supersteps and unpersists the predecessors.
+    Iterate.rounds("q180_pagerank_copurchase", iters, start) { score =>
       val contrib = score
         .select(col("node").as("u"), expr("s div du").as("c"))
       val inbound = e.select("u", "v").join(gated(contrib, nNodes), "u")
         .groupBy("v").agg(sum("c").as("inc"))
         .withColumnRenamed("v", "node")
-      // Each superstep's score table (|nodes| rows) is cached: without
-      // it the lineage of iteration i re-executes iterations 1..i-1 —
-      // O(iters²) join work (measured 10.4 s -> ~5 s at sf0.1, 3
-      // iters). The cluster-scale form checkpoints every few supersteps
-      // and unpersists the predecessors.
-      val step = score.select("node", "du", "tele")
+      score.select("node", "du", "tele")
         .join(gated(inbound, nNodes), "node")
         .withColumn("s", expr("tele + (85 * inc) div 100"))
         .drop("inc")
-      probeRoundPlan("q180_pagerank_copurchase", it, step)
-      score = step.localCheckpoint(eager = true)
-    }
-    score.select(col("node"), col("s").as("pr"))
+    }.last.select(col("node"), col("s").as("pr"))
   }
 
   /** Synchronous LABEL PROPAGATION (Raghavan et al. 2007) made
@@ -411,14 +372,14 @@ object Graph {
     require(rounds >= 1, "labelPropagationCommunities needs rounds >= 1")
     val e = edges.select("u", "v")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = e.select(col("u").as("node")).distinct()
+    val init = e.select(col("u").as("node")).distinct()
       .withColumn("lbl", col("node"))
     // measured-|V| broadcast gate for the per-round label table (see
     // `gated`): without it the label join sort-merges the cached edge
     // set every round (checkpoint stats carryover defeats the auto
     // threshold)
-    val nNodes = labels.count()
-    for (r <- 1 to rounds) {
+    val nNodes = init.count()
+    Iterate.rounds("q219_label_propagation", rounds, init) { labels =>
       val counted = e
         .join(gated(labels.select(col("node").as("v"), col("lbl")), nNodes),
           "v")
@@ -438,14 +399,11 @@ object Graph {
       // _roundbody_before.txt shows the SortAggregate fallback.
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("node").orderBy(col("n").desc, col("lbl"))
-      val step = counted
+      counted
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select("node", "lbl")
-      probeRoundPlan("q219_label_propagation", r, step)
-      labels = step.localCheckpoint(eager = true)
-    }
-    labels.groupBy(col("lbl").as("community"))
+    }.last.groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).cast("long").as("sz"))
       .orderBy(col("sz").desc, col("community"))
       .limit(k)
@@ -500,16 +458,13 @@ object Graph {
     // fell): such nodes are never dropped (they have no edges to
     // remove) and never counted (dg < k), matching the edge-aggregated
     // semantics where they simply vanish from the degree table.
-    // localCheckpoint per round: the depth-≥2 nested-cache lesson.
-    var deg = d0.localCheckpoint(eager = true)
-    val roundBlocks = scala.collection.mutable.Buffer[DataFrame](deg)
-    val roundStats = (1 to rounds).map { rnd =>
-      val nodesRow = deg.filter(col("dg") >= k)
-        .agg(count(lit(1)).as("nodes"))
+    val drops = scala.collection.mutable.Buffer.empty[DataFrame]
+    val degs = Iterate.rounds("q221_kcore_peel", rounds,
+        d0.localCheckpoint(eager = true)) { deg =>
       // this round's drop frontier: alive, has edges, below threshold
       val drop = deg.filter(col("dg") < k && col("dg") >= 1).select("u")
         .localCheckpoint(eager = true)
-      roundBlocks += drop
+      drops += drop
       // degree correction: each dropped node subtracts 1 from every
       // surviving neighbor — count e0 edges whose v fell THIS round,
       // per u. An edge is corrected exactly once (its endpoint is
@@ -518,37 +473,28 @@ object Graph {
       val corr = e0
         .join(broadcast(drop.select(col("u").as("v"))), "v")
         .groupBy("u").agg(count(lit(1)).as("dc"))
-      val step = deg.filter(col("dg") >= k)
+      deg.filter(col("dg") >= k)
         .join(corr, Seq("u"), "left")
         .select(col("u"),
           (col("dg") - coalesce(col("dc"), lit(0L))).as("dg"))
-      probeRoundPlan("q221_kcore_peel", rnd, step)
-      deg = step.localCheckpoint(eager = true)
-      roundBlocks += deg
-      nodesRow
-        .crossJoin(deg.agg(
-          coalesce(expr("sum(dg) div 2"), lit(0L)).as("edges")))
-        .select(lit(rnd.toLong).as("rnd"), lit(k).as("k"),
-          col("nodes").cast("long").as("nodes"),
-          col("edges").cast("long").as("edges"))
     }
-    // materialize the `rounds` stat rows, then release the caches —
-    // e0/d0 AND every per-round checkpointed deg/drop block (the
-    // round-10 advisor: leaving them to GC is exactly the bench-
-    // session block-manager residue this comment warns about). A
-    // checkpointed frame's blocks belong to its underlying RDD, not
-    // the CacheManager, so Dataset.unpersist would be a no-op on
-    // them — release the wrapped RDD directly.
-    val out = roundStats.reduce(_ unionAll _).orderBy("rnd")
+    // Round r's stats are one aggregate of deg_r: it holds exactly the
+    // rows of deg_{r-1} with dg >= k (the left join against `corr`, one
+    // row per u, keeps the row count), so its count is the surviving
+    // node count and Σ dg ÷ 2 the surviving edge count.
+    val out = (1 to rounds).map { rnd =>
+      degs(rnd).agg(count(lit(1)).as("nodes"),
+          coalesce(expr("sum(dg) div 2"), lit(0L)).as("edges"))
+        .select(lit(rnd.toLong).as("rnd"), lit(k).as("k"), col("nodes"),
+          col("edges"))
+    }.reduce(_ unionAll _).orderBy("rnd")
       .localCheckpoint(eager = true)
-    // e0/d0 (plain caches) are left to the caller's clearCache — the
-    // Dataset.unpersist sweep re-canonicalizes every cached plan per
-    // call and measured ~0.2-0.3 s each (r15, the kHopFrontiers
-    // finding). The checkpointed round blocks MUST still be released
-    // here: their blocks belong to the wrapped RDD, which clearCache
-    // (a CacheManager operation) never touches — and that RDD-level
-    // release is cheap, no plan matching anywhere.
-    roundBlocks.foreach(releaseCheckpoint)
+    // then release every checkpointed deg/drop block: their blocks
+    // belong to the wrapped RDD, which clearCache never touches, and the
+    // RDD-level release is cheap. e0/d0 (plain caches) are left to the
+    // caller's clearCache — each Dataset.unpersist re-canonicalizes
+    // every cached plan, ~0.2-0.3 s (r15, the kHopFrontiers finding).
+    (degs ++ drops).foreach(Iterate.releaseCheckpoint)
     out
   }
 
@@ -584,33 +530,27 @@ object Graph {
     require(rounds >= 1, "connectedComponentsInt needs rounds >= 1")
     val e = edges.select("u", "v")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var lbl = e.select(col("u").as("node")).distinct()
+    val init = e.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
       .localCheckpoint(eager = true)
     // measured-|V| broadcast gate for the per-round label frames (see
     // `gated`)
-    val nNodes = lbl.count()
-    var last = lbl
-    for (r <- 1 to rounds) {
-      last = lbl
+    val nNodes = init.count()
+    // each round also carries its predecessor's label as `pl`, so the
+    // last round alone answers `changed`. e (plain cache) is left to
+    // the caller's clearCache (r15 — the Dataset.unpersist CacheManager
+    // sweep cost, see kHopFrontiers)
+    Iterate.rounds("q259_connected_components", rounds, init) { lbl =>
       val nbrMin = e.join(gated(lbl.select(col("node").as("u"),
           col("lbl").as("nl")), nNodes), "u")
         .groupBy(col("v").as("node")).agg(min("nl").as("m"))
-      val step = lbl.join(gated(nbrMin, nNodes), Seq("node"), "left")
+      lbl.join(gated(nbrMin, nNodes), Seq("node"), "left")
         .select(col("node"),
-          least(col("lbl"), coalesce(col("m"), col("lbl"))).as("lbl"))
-      probeRoundPlan("q259_connected_components", r, step)
-      lbl = step.localCheckpoint(eager = true)
-    }
-    val out = lbl
-      .join(gated(last.select(col("node"), col("lbl").as("pl")), nNodes),
-        "node")
+          least(col("lbl"), coalesce(col("m"), col("lbl"))).as("lbl"),
+          col("lbl").as("pl"))
+    }.last
       .select(col("node"), col("lbl").as("component"),
         when(col("lbl") =!= col("pl"), lit(1L)).otherwise(lit(0L))
           .as("changed"))
-      .localCheckpoint(eager = true)
-    // e (plain cache) left to the caller's clearCache (r15 — the
-    // Dataset.unpersist CacheManager sweep cost, see kHopFrontiers)
-    out
   }
 }

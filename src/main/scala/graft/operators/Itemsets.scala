@@ -186,8 +186,7 @@ object Itemsets {
       .limit(k)
     if (!materialize) lazyOut
     else {
-      // materialize the k result rows, then release the round caches
-      // (the Bpe.learnMerges pattern)
+      // materialize the k result rows (the Bpe.learnMerges pattern)
       val out = lazyOut.localCheckpoint(eager = true)
       // The maxBasket cap DROPS over-wide baskets from enumeration
       // (their support contributions vanish) — make that observable

@@ -135,15 +135,9 @@ object Similarity {
               buildSamplePerMille: Int = 1000,
               buildSampleSeed: Int = 0): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    require(buildSamplePerMille >= 1 && buildSamplePerMille <= 1000,
-      "buildSamplePerMille must be in [1, 1000]")
     ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
-    val trainSet =
-      if (buildSamplePerMille == 1000) e
-      else e.filter(graft.functions.TextFunctions
-        .hash60(col("vec_id").cast("string"), buildSampleSeed)
-        % 1000 < buildSamplePerMille)
+    val trainSet = trainSample(e, buildSamplePerMille, buildSampleSeed)
     val cents = centroidsWide(trainSet)
     val assigned = assignToNearest(e.drop("lbl"), cents)
     val qv = e.filter(col("vec_id") === queryId).select(col("v").as("qv"))
@@ -174,11 +168,7 @@ object Similarity {
                          indexDir: String): DataFrame = {
     ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
-    val trainSet =
-      if (buildSamplePerMille == 1000) e
-      else e.filter(graft.functions.TextFunctions
-        .hash60(col("vec_id").cast("string"), buildSampleSeed)
-        % 1000 < buildSamplePerMille)
+    val trainSet = trainSample(e, buildSamplePerMille, buildSampleSeed)
     val cents = centroidsWide(trainSet)
     val qv = e.filter(col("vec_id") === queryId).select(col("v").as("qv"))
     // BUILD: the index at rest — one bucket directory per coarse cell
@@ -194,6 +184,19 @@ object Similarity {
       .select(col("vec_id"), round(cos(col("v"), col("qv")), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(k)
+  }
+
+  /** The deterministic quantizer-training sample of a `vec_id`-keyed
+    * frame: rows whose hash60(vec_id, seed) falls below `perMille`
+    * per mille — hash gating, never rand(), so the trained centroids
+    * replay across runs, engines and partitionings. 1000 keeps `e`.
+    */
+  private def trainSample(e: DataFrame, perMille: Int, seed: Int): DataFrame = {
+    require(perMille >= 1 && perMille <= 1000,
+      "buildSamplePerMille must be in [1, 1000]")
+    if (perMille == 1000) e
+    else e.filter(graft.functions.TextFunctions
+      .hash60(col("vec_id").cast("string"), seed) % 1000 < perMille)
   }
 
   /** Wide per-label centroids (c_lbl, cv) from a (v, lbl) training set —
@@ -275,16 +278,10 @@ object Similarity {
                        buildSamplePerMille: Int = 1000,
                        buildSampleSeed: Int = 0): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    require(buildSamplePerMille >= 1 && buildSamplePerMille <= 1000,
-      "buildSamplePerMille must be in [1, 1000]")
     ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
       .filter(array_max(transform(col("v"), x => abs(x))) > 0)
-    val trainSet =
-      if (buildSamplePerMille == 1000) e
-      else e.filter(graft.functions.TextFunctions
-        .hash60(col("vec_id").cast("string"), buildSampleSeed)
-        % 1000 < buildSamplePerMille)
+    val trainSet = trainSample(e, buildSamplePerMille, buildSampleSeed)
     val cents = centroidsWide(trainSet)
     val assigned = assignToNearest(e.drop("lbl"), cents)
       .withColumn("q8", graft.functions.Int8Vec.pack(quantizeInt8(col("v"))))
@@ -484,20 +481,14 @@ object Similarity {
                     buildSampleSeed: Int = 0): DataFrame = {
     require(rounds >= 1, "kmeansBuckets needs rounds >= 1")
     require(minC >= 1, "kmeansBuckets needs minC >= 1")
-    require(buildSamplePerMille >= 1 && buildSamplePerMille <= 1000,
-      "buildSamplePerMille must be in [1, 1000]")
     ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"))
+    val train = trainSample(e, buildSamplePerMille, buildSampleSeed)
     val n = e.count()
     require(n >= 1, "kmeansBuckets needs a non-empty corpus")
     // C from the FULL corpus size even under sampled training: the
     // index must hold ~√n buckets for the data it will serve
     val c = math.max(minC.toLong, graft.functions.IntMath.isqrt(n)).toInt
-    val train =
-      if (buildSamplePerMille == 1000) e
-      else e.filter(graft.functions.TextFunctions
-        .hash60(col("vec_id").cast("string"), buildSampleSeed)
-        % 1000 < buildSamplePerMille)
     // seed centroids: rank 0..C-1 over (hash60, id) of the TRAIN set —
     // C rows, so the unpartitioned rank window is driver-bounded by
     // construction
@@ -517,43 +508,34 @@ object Similarity {
       .localCheckpoint(eager = true)
     require(buildSamplePerMille == 1000 || seeds.limit(1).count() >= 1,
       "buildSamplePerMille gated out the entire corpus — no train rows")
-    if (buildSamplePerMille == 1000) {
-      // full build: the loop's assignment passes ARE the output
-      var cents = seeds
-      var assigned = assignToNearest(e, cents)
-      for (_ <- 1 to rounds) {
-        cents = centroidsWide(
-            assigned.select(col("bucket").as("lbl"), col("v")))
-          .localCheckpoint(eager = true)
-        assigned = assignToNearest(
-            assigned.drop("bucket0").withColumnRenamed("bucket", "bucket0"),
-            cents)
-          .localCheckpoint(eager = true)
-      }
-      assigned.select(col("vec_id"), col("v"), col("bucket"),
-        (col("bucket0") =!= col("bucket")).as("moved"))
-    } else {
-      // sampled build: refine on the train set only, then assign the
-      // FULL corpus against the last two centroid tables so `bucket`
-      // and the `moved` fixed-point audit keep their full-corpus
-      // contract (restricted to train rows, moved equals the train
-      // refinement's own residual)
-      var prev = seeds
-      var cents = seeds
-      var assignedT = assignToNearest(train, cents)
-      for (_ <- 1 to rounds) {
-        prev = cents
-        cents = centroidsWide(
-            assignedT.select(col("bucket").as("lbl"), col("v")))
-          .localCheckpoint(eager = true)
-        assignedT = assignToNearest(assignedT.drop("bucket"), cents)
-          .localCheckpoint(eager = true)
-      }
-      val a0 = assignToNearest(e, prev).withColumnRenamed("bucket", "bucket0")
-      assignToNearest(a0, cents)
-        .select(col("vec_id"), col("v"), col("bucket"),
-          (col("bucket0") =!= col("bucket")).as("moved"))
-    }
+    // ONE refinement loop over the train set (the full corpus unless
+    // sampled): each round re-derives the centroids from the previous
+    // assignment and reassigns, carrying the previous bucket as
+    // `bucket0`; `prev`/`cents` hold the last two centroid tables
+    var prev = seeds
+    var cents = seeds
+    val refined = Iterate.rounds("kmeans_buckets", rounds,
+        assignToNearest(train, seeds)) { assigned =>
+      prev = cents
+      cents = centroidsWide(
+          assigned.select(col("bucket").as("lbl"), col("v")))
+        .localCheckpoint(eager = true)
+      assignToNearest(
+        assigned.drop("bucket0").withColumnRenamed("bucket", "bucket0"),
+        cents)
+    }.last
+    // full build: the last round IS the output. Sampled build: assign
+    // the FULL corpus against the last two centroid tables so `bucket`
+    // and the `moved` fixed-point audit keep their full-corpus contract
+    // (restricted to train rows, moved equals the train refinement's
+    // own residual)
+    val assigned =
+      if (buildSamplePerMille == 1000) refined
+      else assignToNearest(
+        assignToNearest(e, prev).withColumnRenamed("bucket", "bucket0"),
+        cents)
+    assigned.select(col("vec_id"), col("v"), col("bucket"),
+      (col("bucket0") =!= col("bucket")).as("moved"))
   }
 
   /** [[kmeansBuckets]] with a BUILD-TIME bucket-size cap — the
@@ -578,8 +560,7 @@ object Similarity {
   def kmeansBucketsCapped(df: DataFrame, id: Column, vec: Column,
       rounds: Int, capNum: Int, capDen: Int, minC: Int = 10,
       buildSamplePerMille: Int = 1000,
-      buildSampleSeed: Int = 0,
-      narrowCheckpoint: Boolean = false): DataFrame = {
+      buildSampleSeed: Int = 0): DataFrame = {
     require(capNum >= 1 && capDen >= 1 && capNum > capDen,
       "cap must be a ratio > 1 (capNum > capDen >= 1)")
     val idx = kmeansBuckets(df, id, vec, rounds, minC,
@@ -592,21 +573,7 @@ object Similarity {
       .agg(count(lit(1)).cast("long").as("sz"))
       .filter(col("sz") * capDen * c > capNum * n)
       .select("bucket").localCheckpoint(eager = true)
-    val post = splitBucketsLocal(idx, flagged)
-    // `narrowCheckpoint` pins the post-split ASSIGNMENT — four longs
-    // per row, no vectors — so a fan-out consumer (q271's mining reads
-    // the membership from four branches) replays a checkpoint-to-
-    // checkpoint hash join instead of the whole split kernel
-    // (windows + broadcast argmax) per branch. The FULL-width
-    // checkpoint was measured WORSE at sf10 for both consumer classes
-    // (SCALING.md r11: it defeats column pruning of the 64-dim
-    // vectors); this is the middle point the r11 verdict asked to
-    // measure. Default off: single-consumer callers (q268's audit
-    // rollup) don't re-derive enough to pay for the materialization.
-    if (!narrowCheckpoint) post
-    else idx.select(col("vec_id"), col("v"))
-      .join(post.select("vec_id", "bucket", "parent", "was_split")
-        .localCheckpoint(eager = true), "vec_id")
+    splitBucketsLocal(idx, flagged)
   }
 
   /** Incremental IVF INSERT maintenance + staleness audit — the serve

@@ -54,6 +54,27 @@ class GraphSpec extends SparkSpec {
     assert(got(2L) > got(1L), "hub outranks leaves")
   }
 
+  test("plan probe: one unmaterialized round plan per pageRankInt round, only when set") {
+    import java.nio.file.{Files, Paths}
+    val dir = Paths.get(scratch("graph_plan_probe"))
+    val edges = edgesOf((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L))
+    def written = Option(dir.toFile.list()).fold(Set.empty[String])(_.toSet)
+    sys.props("graft.plan.probe.dir") = dir.toString
+    try {
+      Graph.pageRankInt(edges, iters = 2).collect()
+      assert(written === Set("q180_pagerank_copurchase_round1.txt",
+        "q180_pagerank_copurchase_round2.txt"))
+      written.foreach { f =>
+        val plan = Files.readString(dir.resolve(f))
+        // the round BODY, not the checkpoint scan it materializes into
+        assert(plan.contains("Join"), s"$f holds no join:\n$plan")
+      }
+      written.foreach(f => Files.delete(dir.resolve(f)))
+    } finally sys.props.remove("graft.plan.probe.dir")
+    Graph.pageRankInt(edges, iters = 2).collect()
+    assert(written.isEmpty, "the probe wrote while its property was unset")
+  }
+
   test("triangleStats: K4 has 4 triangles, 12 wedges, clustering 10000") {
     // K4: every pair adjacent -> C(4,3)=4 triangles; wedges = 4*C(3,2)=12;
     // clustering = 3*4/12 = 1.0 -> 10000 bp

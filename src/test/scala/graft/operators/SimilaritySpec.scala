@@ -226,6 +226,16 @@ class SimilaritySpec extends SparkSpec {
     assert(bucketDirs.nonEmpty)
   }
 
+  test("ivfTopKPartitioned refuses buildSamplePerMille = 0 instead of training on nothing") {
+    val err = intercept[IllegalArgumentException] {
+      Similarity.ivfTopKPartitioned(emb, col("vec_id"), col("embedding"),
+        col("label"), queryId = 0L, k = 10, nprobe = 1,
+        buildSamplePerMille = 0, buildSampleSeed = 0,
+        indexDir = scratch("ivf_part_idx_empty_sample"))
+    }
+    assert(err.getMessage.contains("buildSamplePerMille must be in [1, 1000]"))
+  }
+
   test("rankedNeighborsIvf: nprobe=C equals the exact neighbor lists") {
     // with every bucket probed, the IVF candidate set is the full
     // corpus, so lists must equal the exact scored pass row-for-row

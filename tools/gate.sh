@@ -8,6 +8,16 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# graft.util.TmpDirs.perProcess dirs (graft_<name>-<pid>-<millis>) are
+# deleted when their JVM exits, so the gate must leave no more of them
+# than it found. Assumes a quiet host: another graft JVM running (or
+# killed) meanwhile changes the count too.
+scratch_dirs() {
+  find "${TMPDIR:-/tmp}" -maxdepth 1 -regextype posix-extended \
+    -regex '.*/graft_.*-[0-9]+-[0-9]+' | wc -l
+}
+dirs_before=$(scratch_dirs)
+
 echo "== sbt compile + test =="
 sbt -batch test
 
@@ -23,5 +33,12 @@ echo "== Verify + selfcheck @ sf0.1 (rounding-boundary pass) =="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.1 /tmp/gate_sf01" \
   2>&1 | grep -E "verify\]" || true
 python3 tools/selfcheck.py /root/testdata/sf0.1 /tmp/gate_sf01
+
+echo "== per-process scratch dirs cleaned up at JVM exit =="
+dirs_after=$(scratch_dirs)
+if [ "$dirs_after" -gt "$dirs_before" ]; then
+  echo "per-process scratch dirs grew: $dirs_before -> $dirs_after" >&2
+  exit 1
+fi
 
 echo "== gate green =="

@@ -176,8 +176,9 @@ R10_NARRATIVE = (
     "re-join pays a full-corpus hash join per consumer branch — at "
     "scale the flagged share shrinks and recompute beats "
     "materialization, so unmaterialized stays the default "
-    "(kmeansBucketsCapped(narrowCheckpoint = true) keeps the "
-    "measured alternative one flag away). Round-12 also brings the "
+    "(the kmeansBucketsCapped flag that kept the measured alternative "
+    "was later deleted unused; it is in git history). Round-12 also "
+    "brings the "
     "relational/IVM family into the second decade for the first "
     "time — q262 join-IVM (broadcast bilinear delta terms), q151 "
     "star join, q229 bucketed co-located join, q88 incremental "
