@@ -3,7 +3,7 @@ package graft.ingest
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /** The two struct-flattening strategies of the reference, re-expressed as
   * schema-time column derivations (driver-side StructType walks emitting a
@@ -26,23 +26,32 @@ object Flatten {
     * leaves — only structs recurse, mirroring pd.json_normalize.
     */
   def leafPaths(schema: StructType, prefix: String = ""): Seq[String] =
+    leafFields(schema, prefix).map(_._1)
+
+  private def leafFields(schema: StructType, prefix: String): Seq[(String, StructField)] =
     schema.fields.toSeq.flatMap { f =>
       val p = if (prefix.isEmpty) f.name else s"$prefix.${f.name}"
       f.dataType match {
-        case s: StructType => leafPaths(s, p)
-        case _ => Seq(p)
+        case s: StructType => leafFields(s, p)
+        case _ => Seq(p -> f)
       }
     }
 
-  /** loopdict: dot-flatten -> last-segment rename -> keep-first dedup. */
-  def loopdict(df: DataFrame): DataFrame = {
+  /** loopdict's kept leaves: dot-flatten -> last-segment rename (a
+    * leaf's own name) -> keep-first dedup.
+    */
+  private def loopdictLeaves(schema: StructType): Seq[(String, StructField)] = {
     val seen = mutable.HashSet.empty[String]
-    val cols: Seq[Column] = leafPaths(df.schema).flatMap { p =>
-      val leaf = p.split('.').last
-      if (seen.add(leaf)) Some(col(p).as(leaf)) else None
-    }
-    df.select(cols: _*)
+    leafFields(schema, "").filter { case (_, f) => seen.add(f.name) }
   }
+
+  /** loopdict: dot-flatten -> last-segment rename -> keep-first dedup. */
+  def loopdict(df: DataFrame): DataFrame =
+    df.select(loopdictLeaves(df.schema).map { case (p, f) => col(p).as(f.name) }: _*)
+
+  /** The row type [[loopdict]] gives a frame of `schema`, without one. */
+  def loopdictSchema(schema: StructType): StructType =
+    StructType(loopdictLeaves(schema).map(_._2))
 
   /** flatten_dict: bare leaf names, arrays positionally exploded into
     * `{name}_{i}`. The reference derives each row's width from that row's

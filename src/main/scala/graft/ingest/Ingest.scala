@@ -3,6 +3,7 @@ package graft.ingest
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
 import graft.model.Schemas
 
 /** Ingest: YouTube `channels().list` JSON responses -> flat raw rows.
@@ -21,6 +22,14 @@ object Ingest {
   /** API housekeeping columns removed after flatten (P4, extract.py:113). */
   val dropCols: Seq[String] =
     Seq("kind", "description", "etag", "id", "topicIds", "topicCategories")
+
+  /** The row type [[transformItems]] produces from `Schemas.channelItem`
+    * rows (flatten, the `timestamp` tag, drops): the lake's data columns.
+    */
+  val rawSchema: StructType =
+    StructType(Flatten.loopdictSchema(Schemas.channelItem)
+      .filterNot(f => dropCols.contains(f.name)))
+      .add("timestamp", TimestampType)
 
   /** Response-string column -> exploded item rows (streaming-capable:
     * pure expressions, no actions).
@@ -69,8 +78,12 @@ object Ingest {
   }
 
   /** RAW table name from a lake prefix: `'_'.join(prefix.split(' ')) +
-    * "_RAW"` — extract.py:162-164 (lowercased for Spark catalog rules).
+    * "_RAW"` — extract.py:162-164, lowercased and with every other
+    * character outside [A-Za-z0-9_] (a key's '#', '+', '.') made '_'
+    * too, since Spark's catalog names tables from those alone. Keys
+    * that map to one name share its table, as case-only twins do.
     */
   def rawTableName(channelKey: String): String =
-    (channelKey.split(' ').mkString("_") + "_RAW").toLowerCase
+    (channelKey.split(' ').mkString("_") + "_RAW")
+      .replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
 }

@@ -1,7 +1,10 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import graft.ingest.Ingest
 
 /** The lake layer (reference: per-channel S3 CSV objects, one prefix per
@@ -35,19 +38,51 @@ object Lake {
       .write.mode("append").partitionBy("channel_key")
       .option("header", "true").csv(path)
 
+  /** One channel's partition dir: the key Hive-escaped, as the
+    * partitioned write named it.
+    */
+  def channelDir(path: String, channelKey: String): String =
+    s"$path/channel_key=${ExternalCatalogUtils.escapePathName(channelKey)}"
+
   /** S2 (CSV variant): header + inferSchema, like pd.read_csv. */
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
-  /** S2: read the whole lake — one listing and one schema inference. */
+  /** The parquet lake's row type: the extract's columns plus the
+    * `channel_key` partition column as a string. Declared, not inferred:
+    * inference types a lake whose keys all parse as numbers as integer
+    * keys, and then "0007" and "7" select each other's rows.
+    */
+  val schema: StructType = Ingest.rawSchema.add("channel_key", StringType)
+
+  /** S2: read the whole lake — one listing, no footer schema inference. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(schema).parquet(path)
 
   /** S3: one channel of a lake already resolved by [[read]], via
     * partition pruning — no further listing or schema inference.
     */
   def readChannel(lake: DataFrame, channelKey: String): DataFrame =
     lake.filter(col("channel_key") === channelKey)
+
+  /** Bytes per channel key (as [[channels]] returns it) in the listing
+    * `lake`, a [[read]], was resolved from — read from the file index
+    * Spark built for that read, so nothing is listed again.
+    */
+  def channelBytes(lake: DataFrame): Map[String, Long] =
+    listing(lake).groupMapReduce(_.values.getUTF8String(0).toString)(
+      _.files.map(_.getLen).sum)(_ + _)
+
+  /** Total bytes of the files a file-source read was resolved from, from
+    * its own cached listing.
+    */
+  def listedBytes(df: DataFrame): Long =
+    listing(df).flatMap(_.files).map(_.getLen).sum
+
+  private def listing(df: DataFrame): Seq[PartitionDirectory] =
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.listFiles(Nil, Nil) }
+      .flatten
 
   /** Channel discovery (reference: s3.list_objects, extract.py:158-159)
     * — a pure filesystem directory listing of the `channel_key=` partition

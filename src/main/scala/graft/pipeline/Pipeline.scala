@@ -58,11 +58,22 @@ object Pipeline {
     * in first-occurrence `Lake.channels` (sorted) order, which fixes the
     * mart's UNION order.
     *
-    *   - One lake listing per call: the parquet lake is listed and its
-    *     schema inferred once, and every channel's frame is a
-    *     partition-pruned filter of that one resolution — so all RAW
-    *     tables come from a single lake snapshot. The header-CSV lake
-    *     keeps the reference's per-channel `read_csv` schema inference.
+    *   - One lake listing per call: the parquet lake is listed once
+    *     (its schema is declared, `Lake.schema`), and every channel's
+    *     frame is a partition-pruned filter of that one resolution — so
+    *     all RAW tables come from a single lake snapshot. The header-CSV
+    *     lake keeps the reference's per-channel `read_csv` schema
+    *     inference.
+    *   - RAW files follow bytes, not batches: each channel's frame is
+    *     written in max(1, ⌈channel bytes / split⌉) partitions, split =
+    *     the session's `spark.sql.files.maxPartitionBytes`, the bytes
+    *     taken from the listing its read already made. The reference's
+    *     lake keeps one object per channel (W1 rewrites it), so its
+    *     reload never pays per batch; the append lake holds one file per
+    *     channel per batch, and without this every RAW table and the
+    *     mart CTAS would carry that file count. A coalesce merges whole
+    *     scan splits with no shuffle, and is a no-op once the lake's
+    *     files are split-sized.
     *   - Concurrent loads: the per-channel loads run on a driver thread
     *     pool of min(#channels, defaultParallelism) threads, since one
     *     channel's write is a small job that leaves most cores idle.
@@ -77,13 +88,18 @@ object Pipeline {
     val chans = Lake.channels(spark, conf.lakePath)
     val keyed = chans.map(ch => s"${conf.database}.${Ingest.rawTableName(ch)}")
     val tables = keyed.distinct
-    // Resolved by the first load that needs it; an empty lake has no schema.
+    // Resolved by the first load that needs it, so an empty lake is never read.
     lazy val lake = Lake.read(spark, conf.lakePath)
+    lazy val lakeBytes = Lake.channelBytes(lake)
     def frame(ch: String): DataFrame =
-      if (conf.csvLake) Lake.readCsv(spark, s"${conf.lakePath}/channel_key=$ch")
-      else Lake.readChannel(lake, ch).drop("channel_key")
-    // Keys that differ only in case share a table; the last one wins, as
-    // it did when the channels were loaded one after another.
+      if (conf.csvLake) {
+        val df = Lake.readCsv(spark, Lake.channelDir(conf.lakePath, ch))
+        splitSized(df, Lake.listedBytes(df))
+      } else splitSized(Lake.readChannel(lake, ch).drop("channel_key"),
+        lakeBytes.getOrElse(ch, sys.error(s"no listed lake files for channel key '$ch'")))
+    // Keys that map to one table name (case-only twins, "A#B" and "A_B")
+    // share a table; the last one wins, as it did when the channels were
+    // loaded one after another.
     val owner = keyed.zip(chans).toMap
     val loads = tables.map(t =>
       (() => Warehouse.loadRaw(frame(owner(t)), t)): Callable[Unit])
@@ -95,6 +111,12 @@ object Pipeline {
       }
     finally pool.shutdown()
     tables
+  }
+
+  /** `df` in max(1, ⌈bytes / split⌉) partitions (see [[loadWarehouse]]). */
+  private def splitSized(df: DataFrame, bytes: Long): DataFrame = {
+    val split = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    df.coalesce(math.max(1L, (bytes + split - 1) / split).toInt)
   }
 
   /** W4: one identity staging view per RAW table (dbt `materialized:

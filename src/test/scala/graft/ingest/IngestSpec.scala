@@ -46,6 +46,8 @@ class IngestSpec extends SparkSpec {
   test("rawTableName joins spaces and appends _RAW, lowercased") {
     assert(Ingest.rawTableName("Jungle Toons") === "jungle_toons_raw")
     assert(Ingest.rawTableName("MrBeast") === "mrbeast_raw")
+    assert(Ingest.rawTableName("A#B") === "a_b_raw")
+    assert(Ingest.rawTableName("X+Y_Z") === "x_y_z_raw")
   }
 
   test("extract drops API housekeeping columns and stamps a batch-constant timestamp") {
@@ -57,6 +59,16 @@ class IngestSpec extends SparkSpec {
     val tss = raw.select("timestamp").collect().map(_.getTimestamp(0)).distinct
     assert(tss === Array(ts)) // batch-CONSTANT, not per-row clock
     assert(raw.count() === 2)
+  }
+
+  test("rawSchema is the extract's row type, and the declared lake schema its inferred one") {
+    val ts = Timestamp.from(Instant.parse("2026-02-01T00:00:00Z"))
+    val raw = Ingest.extract(spark, Seq(json(Chan(3, "E#F", 3, 1.0), 2)), ts)
+    def typed(s: org.apache.spark.sql.types.StructType) = s.map(f => f.name -> f.dataType)
+    assert(typed(raw.schema) === typed(Ingest.rawSchema))
+    val lake = scratch("rawschema_lake")
+    graft.lake.Lake.appendBatch(raw, lake)
+    assert(typed(spark.read.parquet(lake).schema) === typed(graft.lake.Lake.schema))
   }
 
   test("corrupt or schema-less JSON responses degrade to zero rows, not errors") {

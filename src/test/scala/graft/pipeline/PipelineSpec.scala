@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{coalesce, col, element_at, typedLit}
 import graft.SparkSpec
 import graft.ingest.Ingest
 import graft.lake.Lake
@@ -93,18 +94,29 @@ class PipelineSpec extends SparkSpec {
     assert(!tables.exists(_.toLowerCase.contains("phantom")), tables.toSeq)
   }
 
-  /** A lake of `cs` × `nBatches` behind a reset database (as
-    * `Pipeline.run` resets it), with nothing loaded yet.
+  /** A lake of `cs` × `batches` five-minute batches behind a reset
+    * database (as `Pipeline.run` resets it), with nothing loaded yet.
+    * `retitle` replaces titles after the extract, for keys no
+    * `Chan.title` can spell.
     */
-  private def lakeOf(name: String, cs: Seq[SyntheticChannels.Chan]): Pipeline.Config = {
+  private def lakeOf(name: String, cs: Seq[SyntheticChannels.Chan],
+                     batches: Int = nBatches, csv: Boolean = false,
+                     retitle: Map[String, String] = Map.empty): Pipeline.Config = {
     val conf = Pipeline.Config(lakePath = scratch(s"pipe_lake_$name"),
-      database = s"ytanalytics_$name")
+      database = s"ytanalytics_$name", csvLake = csv)
     spark.sql(s"DROP DATABASE IF EXISTS ${conf.database} CASCADE")
     val dbDir = new org.apache.hadoop.fs.Path(
       s"${spark.conf.get("spark.sql.warehouse.dir")}/${conf.database}.db")
     dbDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dbDir, true)
-    (1 to nBatches).foreach(b => Pipeline.extractBatch(spark,
-      cs.map(SyntheticChannels.json(_, b)), SyntheticChannels.batchTs(b), conf))
+    val t0 = SyntheticChannels.batchTs(1).toInstant
+    (1 to batches).foreach { b =>
+      val raw = Ingest.extract(spark, cs.map(SyntheticChannels.json(_, b)),
+        java.sql.Timestamp.from(t0.plusSeconds(300L * b)))
+      val titled = if (retitle.isEmpty) raw else raw.withColumn("title",
+        coalesce(element_at(typedLit(retitle), col("title")), col("title")))
+      if (csv) Lake.appendBatchCsv(titled, conf.lakePath)
+      else Lake.appendBatch(titled, conf.lakePath)
+    }
     conf
   }
 
@@ -115,17 +127,29 @@ class PipelineSpec extends SparkSpec {
   private def rowSet(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  private def rawTable(conf: Pipeline.Config, ch: String) =
+    spark.table(s"${conf.database}.${Ingest.rawTableName(ch)}")
+
   /** Each channel's RAW table holds exactly its lake partition's rows. */
-  private def assertLoaded(conf: Pipeline.Config, chans: Seq[String]): Unit = {
-    val lake = Lake.read(spark, conf.lakePath)
+  private def assertLoaded(conf: Pipeline.Config, chans: Seq[String],
+                           batches: Int = nBatches): Unit = {
+    lazy val lake = Lake.read(spark, conf.lakePath)
     chans.foreach { ch =>
-      val want = Lake.readChannel(lake, ch).drop("channel_key")
-      val got = spark.table(s"${conf.database}.${Ingest.rawTableName(ch)}")
+      val want =
+        if (conf.csvLake) Lake.readCsv(spark, Lake.channelDir(conf.lakePath, ch))
+        else Lake.readChannel(lake, ch).drop("channel_key")
+      val got = rawTable(conf, ch)
       assert(got.columns.toSeq === want.columns.toSeq, ch)
       val rows = rowSet(got)
-      assert(rows.size === nBatches, ch)
+      assert(rows.size === batches, ch)
       assert(rows === rowSet(want), ch)
     }
+  }
+
+  /** Every RAW table, then the mart, of a full load of `conf`. */
+  private def loadAll(conf: Pipeline.Config) = {
+    val tables = Pipeline.loadWarehouse(spark, conf)
+    (tables, Pipeline.transform(spark, Pipeline.registerStaging(spark, tables), conf))
   }
 
   /** Runs `body` under its own job group. Returns its outcome, the
@@ -232,6 +256,63 @@ class PipelineSpec extends SparkSpec {
     val mart = Pipeline.transform(spark,
       Pipeline.registerStaging(spark, tables), conf)
     assert(mart.count() === nBatches)
+  }
+
+  test("RAW tables are written in split-sized files, not one file per batch") {
+    val batches = 12
+    Seq(false, true).foreach { csv =>
+      val conf = lakeOf(s"files_${if (csv) "csv" else "pq"}", chans, batches, csv)
+      val keys = Lake.channels(spark, conf.lakePath)
+      assert(keys.size === chans.size)
+      val (tables, mart) = loadAll(conf)
+      tables.foreach(t => assert(spark.table(t).inputFiles.length === 1, t))
+      assert(mart.inputFiles.length === chans.size)
+      assert(mart.count() === chans.size * batches)
+      assertLoaded(conf, keys, batches)
+    }
+    // A split below one channel's bytes: that table takes ⌈bytes/split⌉ files.
+    val conf = lakeOf("files_split", chans, batches)
+    val ch = Lake.channels(spark, conf.lakePath).head
+    val bytes = Lake.channelBytes(Lake.read(spark, conf.lakePath))(ch)
+    val split = bytes / 3 + 1
+    val want = (bytes + split - 1) / split
+    assert(want > 1 && want < batches)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, split.toString)
+    try Pipeline.loadWarehouse(spark, conf)
+    finally spark.conf.set(key, saved)
+    assert(rawTable(conf, ch).inputFiles.length === want)
+    assertLoaded(conf, Seq(ch), batches)
+  }
+
+  test("numeric channel keys load only their own rows (\"7\" vs \"0007\")") {
+    val conf = lakeOf("numkeys", Seq(SyntheticChannels.Chan(1, "7", 1, 1.0),
+      SyntheticChannels.Chan(3, "0007", 3, 2.0)))
+    val keys = Lake.channels(spark, conf.lakePath)
+    assert(keys === Seq("0007", "7"))
+    val (_, mart) = loadAll(conf)
+    assertLoaded(conf, keys)
+    val lakeRows = Lake.read(spark, conf.lakePath).select("title", "timestamp")
+    assert(rowSet(mart.select("title", "timestamp")) === rowSet(lakeRows))
+  }
+
+  test("Hive-escaped and '+' channel keys each find their listed bytes and rows") {
+    Seq(false, true).foreach { csv =>
+      val conf = lakeOf(s"escaped_${if (csv) "csv" else "pq"}",
+        Seq(SyntheticChannels.Chan(1, "Esc#One", 1, 1.0),
+          SyntheticChannels.Chan(3, "Esc#Two", 3, 2.0)),
+        csv = csv, retitle = Map("Esc One" -> "A#B", "Esc Two" -> "X+Y Z"))
+      val keys = Lake.channels(spark, conf.lakePath)
+      assert(keys === Seq("A#B", "X+Y_Z"))
+      if (!csv)
+        assert(Lake.channelBytes(Lake.read(spark, conf.lakePath)).keySet === keys.toSet)
+      val (tables, mart) = loadAll(conf)
+      assert(tables.size === keys.size)
+      assertLoaded(conf, keys)
+      assert(rowSet(mart.select("title")) ===
+        Seq.fill(nBatches)(Seq("[A#B]", "[X+Y Z]")).flatten.sorted)
+    }
   }
 
   test("retries are bounded: attempts exhausted rethrows the last failure") {

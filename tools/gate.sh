@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # The standing end-of-round gate: compile + unit tests + the benchmark
-# harness's self-tests + oracle compare at BOTH sf0.01 and sf0.1. The
+# harness's self-tests + one elt_deep benchmark run that must report
+# "correct": true + oracle compare at BOTH sf0.01 and sf0.1. The
 # sf0.1 pass exists because cross-engine rounding-boundary bugs (a value
 # landing within 1 ulp of a .00005 boundary flips round(x,4) between JVM
 # and DuckDB libm) are invisible at sf0.01 row counts — q31's history.
@@ -23,6 +24,15 @@ sbt -batch test
 
 echo "== benchmark harness self-tests =="
 python3 -m unittest discover -s perfbench/tests
+
+# The only check of the whole mart against the generator's predicted rows
+# after many batches (16 five-minute batches, one refresh).
+echo "== benchmark smoke run: elt_deep mart against the generator =="
+smoke=$(python3 perfbench/run.py --workload elt_deep --seed 1 --seconds 8 --trace 0 | tail -1)
+if ! grep -q '"correct": true' <<<"$smoke"; then
+  echo "elt_deep smoke run not correct: $smoke" >&2
+  exit 1
+fi
 
 echo "== Verify + selfcheck @ sf0.01 =="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_sf001" \
