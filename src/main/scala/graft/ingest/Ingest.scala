@@ -1,9 +1,11 @@
 package graft.ingest
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 import graft.model.Schemas
 
 /** Ingest: YouTube `channels().list` JSON responses -> flat raw rows.
@@ -24,45 +26,56 @@ object Ingest {
     Seq("kind", "description", "etag", "id", "topicIds", "topicCategories")
 
   /** The row type [[transformItems]] produces from `Schemas.channelItem`
-    * rows (flatten, the `timestamp` tag, drops): the lake's data columns.
+    * rows carrying the `timestamp` tag (flatten, drops): the lake's data
+    * columns.
     */
   val rawSchema: StructType =
     StructType(Flatten.loopdictSchema(Schemas.channelItem)
       .filterNot(f => dropCols.contains(f.name)))
       .add("timestamp", TimestampType)
 
-  /** Response-string column -> exploded item rows (streaming-capable:
-    * pure expressions, no actions).
+  /** [[extract]]'s source rows: one response document and its batch's
+    * tag as epoch micros, a primitive never-null column.
     */
-  def itemsOf(responses: DataFrame, valueCol: String = "value"): DataFrame =
-    responses
-      .select(from_json(col(valueCol), Schemas.channelResponse).as("r"))
-      .select(explode(col("r.items")).as("item"))
-      .select("item.*")
+  private val responseRows: StructType = StructType(Seq(
+    StructField("value", StringType),
+    StructField("ts_us", LongType, nullable = false)))
 
-  /** Parse one-JSON-document-per-string responses into item rows. */
-  def parseResponses(spark: SparkSession, jsons: Seq[String]): DataFrame = {
-    import spark.implicits._
-    spark.read.schema(Schemas.channelResponse).json(jsons.toDS())
-      .select(explode(col("items")).as("item"))
-      .select("item.*")
+  /** Response-string column -> exploded item rows, each followed by its
+    * response's other columns (streaming-capable: pure expressions, no
+    * actions). The one parse of the batch and streaming extract paths.
+    */
+  def itemsOf(responses: DataFrame, valueCol: String = "value"): DataFrame = {
+    val carried = responses.columns.toSeq.filterNot(_ == valueCol).map(col)
+    responses
+      .select(carried :+ from_json(col(valueCol), Schemas.channelResponse).as("r"): _*)
+      .select(carried :+ explode(col("r.items")).as("item"): _*)
+      .select(col("item.*") +: carried: _*)
   }
 
-  /** Flatten + drops + the batch-constant timestamp tag — shared by the
-    * batch and streaming extract paths.
+  /** Flatten + drops over item rows that already carry their batch's
+    * `timestamp` tag — shared by the batch and streaming extract paths.
     */
-  def transformItems(items: DataFrame, batchTs: Timestamp): DataFrame =
-    Flatten.loopdict(items)
-      .withColumn("timestamp", lit(batchTs))
-      .drop(dropCols: _*)
+  def transformItems(items: DataFrame): DataFrame =
+    Flatten.loopdict(items).drop(dropCols: _*)
 
-  /** Full extract: flatten + timestamp + drops. `batchTs` is the batch-
-    * constant wall-clock tag (reference: datetime.now(America/Toronto)
-    * taken ONCE per batch, extract.py:109-111 — hence a literal, not
-    * per-row current_timestamp()).
+  /** Full extract: parse + flatten + timestamp + drops. `batchTs` is the
+    * batch-constant wall-clock tag (reference: datetime.now(America/
+    * Toronto) taken ONCE per batch, extract.py:109-111 — hence one value
+    * per batch, not per-row current_timestamp()). It rides as data, a
+    * `ts_us` column of every source row converted as `lit` would convert
+    * it, not as a literal: a timestamp literal is inlined into the
+    * generated code, so each batch would compile its plan anew, while
+    * this plan's code is the same for every batch. `timestamp_micros` of
+    * a never-null column keeps `timestamp` non-nullable, so the lake's
+    * parquet footers declare it REQUIRED, as a literal did.
     */
-  def extract(spark: SparkSession, jsons: Seq[String], batchTs: Timestamp): DataFrame =
-    transformItems(parseResponses(spark, jsons), batchTs)
+  def extract(spark: SparkSession, jsons: Seq[String], batchTs: Timestamp): DataFrame = {
+    val tsUs = DateTimeUtils.fromJavaTimestamp(batchTs)
+    val responses = spark.createDataFrame(jsons.map(Row(_, tsUs)).asJava, responseRows)
+    transformItems(itemsOf(responses)
+      .withColumn("timestamp", timestamp_micros(col("ts_us"))).drop("ts_us"))
+  }
 
   /** Channel key (P7): title.replace('-',' ').split('/')[0].split(' ')
     * joined by '_' — extract.py:115. The reference computes this driver-

@@ -541,15 +541,16 @@ object PipelineQueries {
     // q173 — S1 through a REAL Spark source: the YouTube extract read
     // via spark.read.format("graft-youtube") (DataSourceV2, one
     // InputPartition per fetch unit, transport executed executor-side —
-    // sources/YoutubeSource.scala) instead of the driver-side
-    // Ingest.parseResponses seam. The fixture transport replays the
+    // sources/YoutubeSource.scala) instead of driver-side strings handed
+    // to Ingest.extract. The fixture transport replays the
     // same SyntheticChannels responses (one file per channel × batch),
     // so the DuckDB oracle replays the flatten/drop/key-derivation
     // pipeline over `customer` at the RAW level — counts still strings,
     // publishedAt still ISO text — proving the source + declarative
     // parse produce byte-identical extract rows. Batch wall-clock tags
     // derive from the unit name (the production analogue: one batch
-    // per crawl run).
+    // per crawl run), so, as in Ingest.extract, the tag is a column of
+    // the data, not a per-batch literal.
     Q("q173_dsv2_extract",
       (s, d) => {
         val dir = new java.io.File(

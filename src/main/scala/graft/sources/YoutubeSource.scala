@@ -13,9 +13,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The S1 REST-API source as a REAL Spark source: a DataSourceV2
-  * `TableProvider` registered as `graft-youtube`, replacing the driver-
-  * side `Ingest.parseResponses` seam as the entry point for YouTube
-  * `channels().list` responses (reference: the live-API fetch at
+  * `TableProvider` registered as `graft-youtube`: an entry point for
+  * YouTube `channels().list` responses that fetches on the executors,
+  * where `Ingest.extract` takes responses already fetched to the driver
+  * (reference: the live-API fetch at
   * /root/reference/dags/extract.py:69-83).
   *
   * The TRANSPORT is the pluggable part: `listUnits` enumerates fetch

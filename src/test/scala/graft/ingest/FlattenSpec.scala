@@ -12,8 +12,10 @@ import graft.pipeline.SyntheticChannels.{Chan, json}
 class FlattenSpec extends SparkSpec {
 
   private val chan = Chan(1, "Chan#One", 5, 10.0)
-  private lazy val items =
-    Ingest.parseResponses(spark, Seq(json(chan, 1)))
+  private lazy val items = {
+    import spark.implicits._
+    Ingest.itemsOf(Seq(json(chan, 1)).toDF("value"))
+  }
 
   test("leafPaths walks depth-first in declaration order") {
     val paths = Flatten.leafPaths(Schemas.channelItem)

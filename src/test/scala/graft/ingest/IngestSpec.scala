@@ -4,10 +4,12 @@ import java.sql.Timestamp
 import java.time.Instant
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.pipeline.SyntheticChannels
 import graft.pipeline.SyntheticChannels.{Chan, json}
 
 /** P4/P5/P7 semantics (/root/reference/dags/extract.py:109-116,162-164):
-  * channel-key derivation edge cases, batch-constant timestamp, drops.
+  * channel-key derivation edge cases, batch-constant timestamp (carried
+  * as data, so one compiled extract serves every batch), drops.
   */
 class IngestSpec extends SparkSpec {
 
@@ -79,6 +81,50 @@ class IngestSpec extends SparkSpec {
       """{"kind": "other#thing"}"""),  // valid JSON, no items array
       ts)
     assert(raw.count() === 1) // load-tolerant: only the good item lands
+  }
+
+  test("one compiled extract serves every batch: the tag is data, not code") {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val chans = Seq(Chan(1, "A#B", 1, 5.0), Chan(2, "C#D", 2, -3.0))
+    def code(b: Int) = codegenStringSeq(Ingest.extract(spark,
+      chans.map(json(_, b)), SyntheticChannels.batchTs(b)).queryExecution.executedPlan)
+      .map(_._2)
+    val first = code(1)
+    assert(first.nonEmpty, "the extract ran no generated code")
+    assert(code(2) === first)
+  }
+
+  test("three tagged batches: each tag holds exactly its batch's rows, timestamp REQUIRED") {
+    val chans = Seq(Chan(1, "A#B", 1, 5.0), Chan(2, "C#D", 2, -3.0))
+    val lake = scratch("tagged_lake")
+    (1 to 3).foreach { b =>
+      val raw = Ingest.extract(spark, chans.map(json(_, b)), SyntheticChannels.batchTs(b))
+      assert(!raw.schema("timestamp").nullable)
+      graft.lake.Lake.appendBatch(raw, lake)
+    }
+    val got = graft.lake.Lake.read(spark, lake)
+    (1 to 3).foreach { b =>
+      val subs = got.filter(col("timestamp") === lit(SyntheticChannels.batchTs(b)))
+        .select("subscriberCount").collect().map(_.getString(0)).sorted.toSeq
+      assert(subs === chans.map(c => (c.k * 100 + b).toString).sorted, s"batch $b")
+    }
+    assert(got.count() === chans.size * 3)
+
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.Type.Repetition
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = got.inputFiles.toSeq
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        assert(schema.getType(schema.getFieldIndex("timestamp"))
+          .getRepetition === Repetition.REQUIRED, f)
+      } finally reader.close()
+    }
   }
 
   test("extract keeps the flattened raw surface (FIXTURES A.2)") {

@@ -1,10 +1,11 @@
 #!/usr/bin/env bash
 # The standing end-of-round gate: compile + unit tests + the benchmark
-# harness's self-tests + one elt_deep benchmark run that must report
-# "correct": true + oracle compare at BOTH sf0.01 and sf0.1. The
-# sf0.1 pass exists because cross-engine rounding-boundary bugs (a value
-# landing within 1 ulp of a .00005 boundary flips round(x,4) between JVM
-# and DuckDB libm) are invisible at sf0.01 row counts — q31's history.
+# harness's self-tests + one elt_deep and one elt_wide benchmark run, each
+# of which must report "correct": true + oracle compare at BOTH sf0.01
+# and sf0.1. The sf0.1 pass exists because cross-engine rounding-boundary
+# bugs (a value landing within 1 ulp of a .00005 boundary flips
+# round(x,4) between JVM and DuckDB libm) are invisible at sf0.01 row
+# counts — q31's history.
 # Run before every round-end commit; every stage must be green.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -31,6 +32,15 @@ echo "== benchmark smoke run: elt_deep mart against the generator =="
 smoke=$(python3 perfbench/run.py --workload elt_deep --seed 1 --seconds 8 --trace 0 | tail -1)
 if ! grep -q '"correct": true' <<<"$smoke"; then
   echo "elt_deep smoke run not correct: $smoke" >&2
+  exit 1
+fi
+
+# The only check of an extract that follows a refresh, and of a second
+# refresh over loaded RAW tables (two hourly cycles of 24 channels).
+echo "== benchmark smoke run: elt_wide mart against the generator =="
+smoke=$(python3 perfbench/run.py --workload elt_wide --seed 1 --seconds 8 --trace 0 | tail -1)
+if ! grep -q '"correct": true' <<<"$smoke"; then
+  echo "elt_wide smoke run not correct: $smoke" >&2
   exit 1
 fi
 
