@@ -5,16 +5,17 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{ArrayCosine, ArrayDot}
 
-/** The library's SparkSessionExtensions: registers the native
-  * expressions at session build time, so a user enables everything with
+/** Everything the engine installs into a session, in one place:
+  * `graft_array_dot` and `graft_array_cosine` for SQL text and
+  * `call_function`, and the planner strategy for `TopKPerKey`.
+  * `graft.util.Session.build` installs it, and `spark.newSession()`
+  * inherits it. Another application enables it with
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `.withExtensions(new GraftExtensions)`) and `graft_array_dot` /
-  * `graft_array_cosine` resolve in SQL text and `call_function` alike —
-  * no per-session imperative registration. The imperative
-  * `ArrayDot.register` / `ArrayCosine.register` paths remain for
-  * sessions built without extensions.
+  * The DataFrame API (`ArrayCosine.cosine`, `ArrayDot.dot`) builds its
+  * expressions directly and needs none of this; `TopK.perKey` needs the
+  * strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -33,9 +34,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "graft_array_cosine(a, b) - fused cosine similarity of two array<double>"),
       (exprs: Seq[Expression]) => ArrayCosine(exprs.head, exprs(1))))
     // whole-operator extension: per-key top-k as partial/final bounded
-    // heaps (plans/TopKPerKey.scala); the imperative
-    // spark.experimental.extraStrategies path remains for sessions
-    // built without extensions (TopK.perKey registers it on first use).
+    // heaps (plans/TopKPerKey.scala)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }

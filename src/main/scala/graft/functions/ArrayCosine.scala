@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.GraftPlanBuilder
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression: cosine similarity of two `array<double>`
@@ -73,16 +73,11 @@ case class ArrayCosine(left: Expression, right: Expression)
 }
 
 object ArrayCosine {
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  def register(spark: SparkSession): Unit = {
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_array_cosine", exprs => ArrayCosine(exprs.head, exprs(1)), "scala_udf")
-    }
-  }
-
-  def cosine(a: Column, b: Column): Column = call_function("graft_array_cosine", a, b)
+  /** Column API: the expression itself, so it needs no registration on
+    * any session. SQL text reaches it as `graft_array_cosine`, which
+    * `graft.GraftExtensions` injects.
+    */
+  def cosine(a: Column, b: Column): Column =
+    GraftPlanBuilder.column(
+      ArrayCosine(GraftPlanBuilder.expression(a), GraftPlanBuilder.expression(b)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.GraftPlanBuilder
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression: dot product of two `array<double>` columns.
@@ -63,27 +63,11 @@ case class ArrayDot(left: Expression, right: Expression)
 }
 
 object ArrayDot {
-  // Weak keys: a retired SparkSession must be collectable — the registry
-  // cache must never pin it. Synchronized map access also removes the
-  // check-then-act race of the old Set-based version.
-  private val registered =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Register `graft_array_dot` in the session's function registry (the
-    * public way to surface a custom expression without internal Column
-    * constructors), idempotently per session. createOrReplaceTempFunction
-    * is itself idempotent, so a racing double-registration is harmless.
+  /** Column API: the expression itself, so it needs no registration on
+    * any session. SQL text reaches it as `graft_array_dot`, which
+    * `graft.GraftExtensions` injects.
     */
-  def register(spark: SparkSession): Unit = {
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_array_dot", exprs => ArrayDot(exprs.head, exprs(1)), "scala_udf")
-    }
-  }
-
-  /** Column API over the registered function. Callers must have called
-    * `register(spark)` for the active session first.
-    */
-  def dot(a: Column, b: Column): Column = call_function("graft_array_dot", a, b)
+  def dot(a: Column, b: Column): Column =
+    GraftPlanBuilder.column(
+      ArrayDot(GraftPlanBuilder.expression(a), GraftPlanBuilder.expression(b)))
 }

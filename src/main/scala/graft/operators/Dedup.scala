@@ -992,7 +992,6 @@ object Dedup {
     */
   def embeddingNearDup(df: DataFrame, id: Column, vec: Column,
                        thr: Double): DataFrame = {
-    graft.functions.ArrayCosine.register(df.sparkSession)
     import graft.functions.ArrayCosine.cosine
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"))
     e.as("a").join(broadcast(e.as("b")), col("a.vec_id") < col("b.vec_id"))
@@ -1022,7 +1021,6 @@ object Dedup {
   def embeddingNearDupLsh(df: DataFrame, id: Column, vec: Column,
                           thr: Double, bands: Int, bitsPerBand: Int,
                           maxBucket: Int): DataFrame = {
-    graft.functions.ArrayCosine.register(df.sparkSession)
     import graft.functions.ArrayCosine.cosine
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"))
     val sigCols = (0 until bands).map(b =>
@@ -1076,7 +1074,6 @@ object Dedup {
     */
   def semDedup(df: DataFrame, id: Column, vec: Column, label: Column,
                thr: Double, maxBucket: Int): DataFrame = {
-    graft.functions.ArrayCosine.register(df.sparkSession)
     import graft.functions.ArrayCosine.cosine
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
       .filter(array_max(transform(col("v"), x => abs(x))) > 0)

@@ -29,7 +29,6 @@ object Similarity {
   /** Query = the embedding of `queryId`; returns the k nearest others. */
   def bruteForceTopK(df: DataFrame, id: Column, vec: Column,
                      queryId: Long, k: Int): DataFrame = {
-    ArrayCosine.register(df.sparkSession)
     val q = df.filter(id === queryId).select(toDouble(vec).as("qv"))
     df.filter(id =!= queryId)
       .select(id.as("vec_id"), toDouble(vec).as("v"))
@@ -60,7 +59,6 @@ object Similarity {
     val maxProbes = 1 + bits + bits * (bits - 1) / 2
     require(probes >= 1 && probes <= maxProbes,
       s"probes must be in [1, $maxProbes]: only Hamming<=2 neighbors are enumerated")
-    ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"),
       signBucket(vec.cast("array<double>"), bits).as("bucket"))
     // masks: 0 (own bucket), single-bit flips in bit order, then two-bit
@@ -135,7 +133,6 @@ object Similarity {
               buildSamplePerMille: Int = 1000,
               buildSampleSeed: Int = 0): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
     val trainSet = trainSample(e, buildSamplePerMille, buildSampleSeed)
     val cents = centroidsWide(trainSet)
@@ -166,7 +163,6 @@ object Similarity {
                          label: Column, queryId: Long, k: Int, nprobe: Int,
                          buildSamplePerMille: Int, buildSampleSeed: Int,
                          indexDir: String): DataFrame = {
-    ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
     val trainSet = trainSample(e, buildSamplePerMille, buildSampleSeed)
     val cents = centroidsWide(trainSet)
@@ -278,7 +274,6 @@ object Similarity {
                        buildSamplePerMille: Int = 1000,
                        buildSampleSeed: Int = 0): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
       .filter(array_max(transform(col("v"), x => abs(x))) > 0)
     val trainSet = trainSample(e, buildSamplePerMille, buildSampleSeed)
@@ -339,7 +334,6 @@ object Similarity {
     require(numSub >= 1 && dim % numSub == 0,
       s"dim=$dim must divide into numSub=$numSub equal subspaces")
     val subLen = dim / numSub
-    ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
       .filter(array_max(transform(col("v"), x => abs(x))) > 0)
     val cents = centroidsWide(e)
@@ -427,7 +421,6 @@ object Similarity {
     */
   def lloydStep(df: DataFrame, id: Column, vec: Column,
                 label: Column): DataFrame = {
-    ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
     val a0 = assignToNearest(e.drop("lbl"), centroidsWide(e))
       .withColumnRenamed("bucket", "bucket0")
@@ -481,7 +474,6 @@ object Similarity {
                     buildSampleSeed: Int = 0): DataFrame = {
     require(rounds >= 1, "kmeansBuckets needs rounds >= 1")
     require(minC >= 1, "kmeansBuckets needs minC >= 1")
-    ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"))
     val train = trainSample(e, buildSamplePerMille, buildSampleSeed)
     val n = e.count()
@@ -898,7 +890,6 @@ object Similarity {
       s"dim=$dim must divide into numSub=$numSub equal subspaces")
     require(nprobe >= 1, "nprobe must be >= 1")
     val subLen = dim / numSub
-    ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
       .filter(array_max(transform(col("v"), x => abs(x))) > 0)
     val cents = centroidsWide(e)
@@ -994,7 +985,6 @@ object Similarity {
   def knnJoin(corpus: DataFrame, id: Column, vec: Column,
               queries: DataFrame, qid: Column, qvec: Column,
               k: Int): DataFrame = {
-    ArrayCosine.register(corpus.sparkSession)
     // Scoring-parallelism guard: the M×N scored pass inherits the
     // CORPUS SCAN's partitioning (the broadcast side adds none, and
     // nothing shuffles before TopKPerKey's partial heaps) — a small
@@ -1050,7 +1040,6 @@ object Similarity {
     */
   def quantizedTopK(df: DataFrame, id: Column, vec: Column,
                     queryId: Long, k: Int, tol: Double): DataFrame = {
-    ArrayCosine.register(df.sparkSession)
     val quantized = quantizedVectors(df, id, vec)
     val q = quantized.filter(col("vec_id") === queryId)
       .select(col("v").as("qv"), col("q8").as("qq"))
@@ -1260,7 +1249,6 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, "rankedNeighborsIvf needs k >= 1")
     require(nprobe >= 1, "nprobe must be >= 1")
-    ArrayCosine.register(df.sparkSession)
     val e = df.select(id.as("vec_id"), toDouble(vec).as("v"), label.as("lbl"))
     val cents = centroidsWide(e)
     val centArr = cents
@@ -1497,7 +1485,6 @@ object Similarity {
   def ndcgLabelGraded(corpus: DataFrame, id: Column, vec: Column,
                       label: Column, queries: DataFrame, qid: Column,
                       qvec: Column, qlabel: Column, k: Int): DataFrame = {
-    ArrayCosine.register(corpus.sparkSession)
     val c = corpus.select(id.as("vec_id"), toDouble(vec).as("v"),
       label.cast("long").as("lbl"))
     val q = queries.select(qid.as("qid"), toDouble(qvec).as("qv"),
@@ -1544,7 +1531,6 @@ object Similarity {
                        queries: DataFrame, qid: Column, qvec: Column,
                        dimsList: Seq[Int], k: Int): DataFrame = {
     require(dimsList.nonEmpty, "matryoshkaRecall needs at least one dims")
-    ArrayCosine.register(corpus.sparkSession)
     val c = corpus.select(id.as("vec_id"), toDouble(vec).as("v"))
     val q = queries.select(qid.as("qid"), toDouble(qvec).as("qv"))
     val joined = c.crossJoin(broadcast(q))
@@ -1590,7 +1576,6 @@ object Similarity {
                    lamPct: Int): DataFrame = {
     require(pickK >= 1 && candK >= pickK, "mmrDiversify needs candK >= pickK >= 1")
     require(lamPct >= 0 && lamPct <= 100, "lamPct is a percentage")
-    ArrayCosine.register(corpus.sparkSession)
     val c = corpus.select(id.as("vec_id"), toDouble(vec).as("v"))
     val qv = c.filter(col("vec_id") === queryId)
       .select(col("v").as("qv"))
@@ -1658,7 +1643,6 @@ object Similarity {
                  queries: DataFrame, qid: Column, qvec: Column,
                  chunks: Int, subDim: Int, k: Int): DataFrame = {
     require(chunks >= 1 && subDim >= 1, "maxSimTopK needs chunks, subDim >= 1")
-    ArrayCosine.register(corpus.sparkSession)
     def chunked(df: DataFrame, idc: Column, v: Column, idName: String,
                 posName: String, outName: String) =
       df.select(idc.as(idName), posexplode(array(

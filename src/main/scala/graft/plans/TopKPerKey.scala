@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -96,23 +96,19 @@ object TopKStrategy extends SparkStrategy {
 }
 
 /** Public API: resolve key/order columns by name against the child's
-  * analyzed output, register the strategy once per session, and wrap
-  * the custom node as a DataFrame.
+  * analyzed output and wrap the custom node as a DataFrame.
   */
 object TopK {
-  private def ensureStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-
   /** Top `k` rows per `keyCols` group, ranked by `orderCol` (descending
     * when `desc`), ties broken by `tiebreak` ascending — the exact
     * semantics of q49's row_number filter.
+    *
+    * The session must carry `graft.GraftExtensions`, which
+    * `graft.util.Session.build` installs: without its `TopKStrategy`,
+    * Spark's planner refuses the `TopKPerKey` node.
     */
   def perKey(df: DataFrame, keyCols: Seq[String], orderCol: String,
              desc: Boolean, tiebreak: Seq[String], k: Int): DataFrame = {
-    val spark = df.sparkSession
-    ensureStrategy(spark)
     val child = GraftPlanBuilder.analyzed(df)
     def attr(name: String): Attribute =
       child.output.find(_.name == name).getOrElse(
@@ -121,7 +117,7 @@ object TopK {
     val order =
       SortOrder(attr(orderCol), if (desc) Descending else Ascending) +:
         tiebreak.map(t => SortOrder(attr(t), Ascending))
-    GraftPlanBuilder.ofRows(spark,
+    GraftPlanBuilder.ofRows(df.sparkSession,
       TopKPerKey(k, keyCols.map(attr), order, child))
   }
 }

@@ -45,7 +45,6 @@ object MultimodalQueries {
     // oracle-replayable.
     Q("q42_multimodal_feature_ann",
       (s, d) => {
-        graft.functions.ArrayCosine.register(s)
         val media = Multimodal.withPayload(
           Tables(s, d, "documents").select("doc_id", "text"), "text")
         val feats = media.select(col("doc_id"),

@@ -411,7 +411,7 @@ object PipelineQueries {
     // both rows have arrived — arrival order changes emission order,
     // never the match set, so the sorted output is deterministic.
     Q("q95_stream_stream_join",
-      (s, d) => {
+      (s, d) => withStateParts(s, 4) {
         val qname = s"graft_q95_sink_${streamSinkRuns.incrementAndGet()}"
         // Size the join's STATE partitions to the stream, not the batch
         // default: a streaming query pins shuffle.partitions at start as
@@ -421,9 +421,6 @@ object PipelineQueries {
         // production decision (state partitions ≈ key cardinality /
         // target per-store size), made explicitly here and restored
         // after; batch queries are unaffected.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
         val ev = Tables(s, d, "events")
         val feedV = graft.util.FeedCache.ensure("q95_views", d) { p =>
           ev.filter(col("event_type") === "view")
@@ -451,7 +448,6 @@ object PipelineQueries {
           .start()
         query.awaitTermination()
         s.table(qname).orderBy("view_id", "click_id")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
       },
       Some("""SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
         |  epoch_us(c.ts) - epoch_us(v.ts) AS gap_us
@@ -480,15 +476,12 @@ object PipelineQueries {
     // IntervalJoinSpec asserts the eviction itself (numRowsRemoved > 0,
     // final state < total buffered) on the same shape.
     Q("q172_stream_join_bounded",
-      (s, d) => {
+      (s, d) => withStateParts(s, 4) {
         val qname = s"graft_q172_sink_${streamSinkRuns.incrementAndGet()}"
         // state partitions sized to key cardinality; 4 (not q95's
         // original 8) — state-store commit cost is per partition per
         // trigger and dominates this query's bench profile (round-9
         // verdict: streaming fixed overhead masks real regressions)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
         val ev = Tables(s, d, "events")
         // Write `df` as 3 event-time-span chunk files with strictly
         // increasing modification times: the file source (latestFirst =
@@ -527,7 +520,6 @@ object PipelineQueries {
           .start()
         query.awaitTermination()
         s.table(qname).orderBy("view_id", "click_id")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
       },
       Some("""SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
         |  epoch_us(c.ts) - epoch_us(v.ts) AS gap_us
@@ -1093,53 +1085,49 @@ object PipelineQueries {
   // gap + delay horizon exactly as in the inner join; the outer
   // verdicts add no state, only an emit-on-evict.
   private lazy val q272 = Q("q272_stream_join_outer",
-    (s, d) => {
+    (s, d) => withStateParts(s, 4) {
       val qname = s"graft_q272_sink_${streamSinkRuns.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val ev = Tables(s, d, "events")
-        val maxUs = ev.agg(max(unix_micros(col("ts"))).as("m"))
-        def flushRow(idName: String, tsName: String, key: Long) =
-          maxUs.select(lit(key).as("user_id"), lit(-1L).as(idName),
-            expr("timestamp_micros(m + 315360000000000)").as(tsName))
-        val feedV = graft.util.FeedCache.ensure("q272_views", d) { p =>
-          writeTimeOrdered(ev.filter(col("event_type") === "view")
-            .select(col("user_id"), col("event_id").as("view_id"),
-              col("ts").as("v_ts")), "v_ts", p, nChunks = 2,
-            extraFiles = Seq(("flush", flushRow("view_id", "v_ts", -1L)))) }
-        val feedC = graft.util.FeedCache.ensure("q272_clicks", d) { p =>
-          writeTimeOrdered(ev.filter(col("event_type") === "click")
-            .select(col("user_id"), col("event_id").as("click_id"),
-              col("ts").as("c_ts")), "c_ts", p, nChunks = 2,
-            extraFiles = Seq(("flush", flushRow("click_id", "c_ts", -2L)))) }
-        val vs = s.readStream.schema(s.read.parquet(feedV).schema)
-          .option("maxFilesPerTrigger", "1").parquet(feedV)
-        val cs = s.readStream.schema(s.read.parquet(feedC).schema)
-          .option("maxFilesPerTrigger", "1").parquet(feedC)
-        // The sentinel filter must NOT live inside the streaming plan:
-        // a deterministic predicate on view_id gets pushed below the
-        // EventTimeWatermark node into the left scan, the flush row
-        // never registers its event time, and the global watermark
-        // (min across sources) stays 30 min behind max(ts) forever —
-        // stranding the tail views' unmatched verdicts in state
-        // (observed: exactly the feed's last-2.5h views missing).
-        // Sentinels are filtered from the SINK read instead.
-        val joined = graft.streaming.IntervalJoin
-          .withinOuter(vs, "v_ts", cs, "c_ts", "user_id",
-            gap = "2 hours", delay = "30 minutes")
-          .select(col("l.user_id").as("user_id"), col("view_id"),
-            col("click_id"),
-            (unix_micros(col("c_ts")) - unix_micros(col("v_ts")))
-              .as("gap_us"))
-        val query = joined.writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        s.table(qname).filter(col("view_id") >= 0)
-          .orderBy(col("view_id"), col("click_id").asc_nulls_first)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val ev = Tables(s, d, "events")
+      val maxUs = ev.agg(max(unix_micros(col("ts"))).as("m"))
+      def flushRow(idName: String, tsName: String, key: Long) =
+        maxUs.select(lit(key).as("user_id"), lit(-1L).as(idName),
+          expr("timestamp_micros(m + 315360000000000)").as(tsName))
+      val feedV = graft.util.FeedCache.ensure("q272_views", d) { p =>
+        writeTimeOrdered(ev.filter(col("event_type") === "view")
+          .select(col("user_id"), col("event_id").as("view_id"),
+            col("ts").as("v_ts")), "v_ts", p, nChunks = 2,
+          extraFiles = Seq(("flush", flushRow("view_id", "v_ts", -1L)))) }
+      val feedC = graft.util.FeedCache.ensure("q272_clicks", d) { p =>
+        writeTimeOrdered(ev.filter(col("event_type") === "click")
+          .select(col("user_id"), col("event_id").as("click_id"),
+            col("ts").as("c_ts")), "c_ts", p, nChunks = 2,
+          extraFiles = Seq(("flush", flushRow("click_id", "c_ts", -2L)))) }
+      val vs = s.readStream.schema(s.read.parquet(feedV).schema)
+        .option("maxFilesPerTrigger", "1").parquet(feedV)
+      val cs = s.readStream.schema(s.read.parquet(feedC).schema)
+        .option("maxFilesPerTrigger", "1").parquet(feedC)
+      // The sentinel filter must NOT live inside the streaming plan:
+      // a deterministic predicate on view_id gets pushed below the
+      // EventTimeWatermark node into the left scan, the flush row
+      // never registers its event time, and the global watermark
+      // (min across sources) stays 30 min behind max(ts) forever —
+      // stranding the tail views' unmatched verdicts in state
+      // (observed: exactly the feed's last-2.5h views missing).
+      // Sentinels are filtered from the SINK read instead.
+      val joined = graft.streaming.IntervalJoin
+        .withinOuter(vs, "v_ts", cs, "c_ts", "user_id",
+          gap = "2 hours", delay = "30 minutes")
+        .select(col("l.user_id").as("user_id"), col("view_id"),
+          col("click_id"),
+          (unix_micros(col("c_ts")) - unix_micros(col("v_ts")))
+            .as("gap_us"))
+      val query = joined.writeStream.format("memory").queryName(qname)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      query.awaitTermination()
+      s.table(qname).filter(col("view_id") >= 0)
+        .orderBy(col("view_id"), col("click_id").asc_nulls_first)
     },
     Some("""WITH v AS (SELECT user_id, event_id AS view_id, ts AS v_ts
       |    FROM events WHERE event_type = 'view'),

@@ -92,7 +92,6 @@ object SimilarityQueries {
     // non-trivial value, not the constant 1.0.
     Q("q55_cosine_null_contract",
       (s, d) => {
-        graft.functions.ArrayCosine.register(s)
         import graft.functions.ArrayCosine.cosine
         val e = Tables(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -534,7 +533,6 @@ object SimilarityQueries {
     // corpus size.
     Q("q126_embedding_decontam",
       (s, d) => {
-        graft.functions.ArrayCosine.register(s)
         val e = Tables(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
           .filter(array_max(transform(col("v"), x => abs(x))) > 0)
@@ -724,7 +722,6 @@ object SimilarityQueries {
     Q("q155_ann_scan_cost",
       (s, d) => {
         import graft.functions.IntMath
-        graft.functions.ArrayCosine.register(s)
         val e = Tables(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val tot = e.filter(col("vec_id") =!= 0L)

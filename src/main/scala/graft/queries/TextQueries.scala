@@ -324,7 +324,6 @@ object TextQueries {
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val qv = embT.filter(col("vec_id") === 0L)
           .select(col("embedding").cast("array<double>").as("qv"))
-        graft.functions.ArrayCosine.register(s)
         val cos = emb.crossJoin(broadcast(qv))
           .select(col("vec_id"),
             round(graft.functions.ArrayCosine.cosine(

@@ -21,8 +21,13 @@ object Session {
     */
   private val MaxPartitionBytes = "4m"
 
+  /** A local session on `cpus` cores with `graft.GraftExtensions`
+    * installed (SQL-text functions and the `TopKPerKey` planner
+    * strategy); `spark.newSession()` inherits the extensions.
+    */
   def build(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.files.maxPartitionBytes", MaxPartitionBytes)

@@ -11,12 +11,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *
   * `events.ts` has shipped in two physical encodings across testdata
   * generations: parquet TIMESTAMP(NANOS) (which Spark's vectorized reader
-  * surfaces as a long under the nanosAsLong fallback) and parquet
-  * timestamp[us] with isAdjustedToUTC=false (which Spark reads as
-  * TIMESTAMP_NTZ). `normalizeTs` dispatches on the arrived type and lands
-  * both on session-tz TimestampType at microsecond precision — the session
-  * runs in UTC, so the NTZ cast is value-preserving and both encodings
-  * yield identical instants (DuckDB applies the same ns->us truncation).
+  * surfaces as a long under the nanosAsLong fallback; the session sets it
+  * when it is built) and parquet timestamp[us] with isAdjustedToUTC=false
+  * (which Spark reads as TIMESTAMP_NTZ). `normalizeTs` dispatches on the
+  * arrived type and lands both on session-tz TimestampType at microsecond
+  * precision — the session runs in UTC, so the NTZ cast is
+  * value-preserving and both encodings yield identical instants (DuckDB
+  * applies the same ns->us truncation).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -37,7 +38,6 @@ object Tables {
     }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }

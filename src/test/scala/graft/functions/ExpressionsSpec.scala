@@ -12,8 +12,6 @@ import graft.SparkSpec
 class ExpressionsSpec extends SparkSpec {
 
   private lazy val vecs = {
-    ArrayDot.register(spark)
-    ArrayCosine.register(spark)
     graft.util.Tables(spark, "/root/testdata/sf0.001", "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(50)
@@ -48,8 +46,6 @@ class ExpressionsSpec extends SparkSpec {
 
   test("ArrayDot/ArrayCosine: mismatched lengths yield NULL, never a truncated value") {
     import spark.implicits._
-    ArrayDot.register(spark)
-    ArrayCosine.register(spark)
     val df = Seq((Array(1.0, 2.0, 3.0), Array(1.0, 2.0)),
                  (Array(1.0, 2.0), Array(1.0, 2.0)))
       .toDF("a", "b")

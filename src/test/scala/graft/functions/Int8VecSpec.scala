@@ -43,7 +43,6 @@ class Int8VecSpec extends AnyFunSuite with SparkSpec {
 
   test("ByteCosine(pack(a), pack(b)) == ArrayCosine(a, b) bit-for-bit") {
     val rnd = new scala.util.Random(42)
-    graft.functions.ArrayCosine.register(spark)
     // one batched round-trip for 50 random pairs (one Spark job, not 50)
     val cases = Seq.fill(50) {
       val a = int8Vec(rnd)
@@ -104,7 +103,6 @@ class Int8VecSpec extends AnyFunSuite with SparkSpec {
       .select(col("vec_id"), col("v"),
         VectorFunctions.quantizeInt8(col("v")).cast("array<double>").as("q8"))
       .filter(col("q8").isNotNull)
-    graft.functions.ArrayCosine.register(spark)
     import graft.functions.ArrayCosine.cosine
     val q = quantized.filter(col("vec_id") === 0L)
       .select(col("q8").as("qq"))

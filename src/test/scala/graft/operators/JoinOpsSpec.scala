@@ -138,13 +138,9 @@ class JoinOpsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects both native functions; SQL text resolves them") {
-    // injection point: a fresh extensions object accepts both functions
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.GraftExtensions().apply(ext) // must inject without error
-    // resolution path: the registered function is callable from SQL text
+    // Session.build installs the extensions and newSession() inherits
+    // them: SQL text resolves both functions with nothing registered
     val s2 = spark.newSession()
-    graft.functions.ArrayCosine.register(s2)
-    graft.functions.ArrayDot.register(s2)
     val row = s2.sql(
       """SELECT graft_array_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c,
         |       graft_array_dot(array(2.0d, 3.0d), array(4.0d, 5.0d)) AS d""".stripMargin)

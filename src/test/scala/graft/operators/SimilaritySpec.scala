@@ -17,6 +17,22 @@ class SimilaritySpec extends SparkSpec {
     assert(!top.exists(_.getLong(0) == 0L)) // query excluded
   }
 
+  test("the DataFrame path builds its cosine with no registered function") {
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      Similarity.bruteForceTopK(df, col("vec_id"), col("embedding"),
+        queryId = 0L, k = 5).collect().map(_.getLong(0)).toSeq
+    val want = ids(emb)
+    val s2 = spark.newSession()
+    val e2 = s2.read.parquet(emb.inputFiles: _*)
+    assert(ids(e2) === want)
+    // with the function gone from the registry SQL text cannot resolve
+    // graft_array_cosine; the Column API must not care
+    s2.sessionState.functionRegistry.dropFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_array_cosine"))
+    assert(!s2.catalog.functionExists("graft_array_cosine"))
+    assert(ids(e2) === want)
+  }
+
   test("ivfTopK results are a subset of brute-force candidates scored identically") {
     val bf = Similarity.bruteForceTopK(emb,
         col("vec_id"), col("embedding"), queryId = 0L, k = 500).collect()
@@ -255,8 +271,6 @@ class SimilaritySpec extends SparkSpec {
     // the per-row sorted probe array and the argmax fold must agree on
     // every vector (same rounded cosine + min-label tie rule), so a
     // query's own bucket is always probed
-    import graft.functions.ArrayCosine
-    ArrayCosine.register(spark)
     val e = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"), col("label").as("lbl"))
     val cents = Similarity.centroidsWide(e)

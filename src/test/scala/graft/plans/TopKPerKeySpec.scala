@@ -48,6 +48,18 @@ class TopKPerKeySpec extends SparkSpec {
     assert(!plan.contains("Sort ["), plan)
   }
 
+  test("the strategy comes from the session's extensions, not extraStrategies") {
+    val df = TopK.perKey(orders, Seq("o_orderpriority"), "o_totalprice",
+      desc = true, tiebreak = Seq("o_orderkey"), k = 3)
+    assert(df.collect().length === 15)
+    assert(spark.experimental.extraStrategies.isEmpty)
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val phases = helper.collect(df.queryExecution.executedPlan) {
+      case t: TopKPerKeyExec => t.partial
+    }
+    assert(phases.sorted === Seq(false, true), df.queryExecution.executedPlan)
+  }
+
   test("duplicate order values: tiebreak makes the kept set deterministic") {
     import spark.implicits._
     val df = Seq(

@@ -20,6 +20,15 @@ scratch_dirs() {
 }
 dirs_before=$(scratch_dirs)
 
+# graft.GraftExtensions, installed by graft.util.Session.build, is the
+# one way the engine's functions and planner strategy enter a session.
+echo "== nothing in src/main installs into a session by hand =="
+if grep -rnE 'functionRegistry|extraStrategies' src/main; then
+  echo "src/main writes a session's function registry or strategies;" \
+    "inject it in graft.GraftExtensions instead" >&2
+  exit 1
+fi
+
 echo "== sbt compile + test =="
 sbt -batch test
 
